@@ -50,7 +50,11 @@ object CheckpointedDedup {
 
   /** Run (or resume) the pipeline. `stopAfter` aborts after the named stage
     * commits — the kill/restart test hook. Returns assignments unless
-    * stopped early. */
+    * stopped early.
+    *
+    * Cache lifecycle: every RDD the run persists (sym, the per-round label
+    * checkpoints, their internal pins) is released before it returns, killed
+    * or complete — the returned assignments read from their snapshot. */
   def run(clips: DataFrame, workDir: String,
           cfg: DedupConfig = DedupConfig.default,
           stopAfter: Option[String] = None,
@@ -86,8 +90,13 @@ object CheckpointedDedup {
     val prevBc = spark.conf.getOption(bcKey)
     if (cfgEff.broadcastLookups) spark.conf.set(aqeKey, "false")
     spark.conf.set(bcKey, "-1")
+    val sc = spark.sparkContext
+    val preexisting = sc.getPersistentRDDs.keySet
     try runStages(clips, workDir, cfgEff, stopAfter, maxCcRounds, p)
     finally {
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!preexisting.contains(id)) rdd.unpersist(blocking = false)
+      }
       spark.conf.set(pKey, prevP)
       prevAqe match {
         case Some(v) => spark.conf.set(aqeKey, v)
@@ -167,12 +176,11 @@ object CheckpointedDedup {
     lazy val sym = ConnectedComponents.checkpointedSym(edges, math.max(2, p))
     if (labels == null) labels = ConnectedComponents.initLabels(sym).localCheckpoint(true)
     // convergence via the monotone label-sum invariant (one scan-agg per
-    // round) instead of the join+count changedCount — same fixpoint, no
-    // per-round join (see ConnectedComponents.labelSum)
+    // round) — exact, no per-round join (see ConnectedComponents.labelSum)
     var prevSum = if (converged) null else ConnectedComponents.labelSum(labels)
     while (!converged && round < maxCcRounds) {
       val t0 = System.nanoTime()
-      val next = ConnectedComponents.step(sym, labels).localCheckpoint(true)
+      val next = ConnectedComponents.step(sym, labels, eager = true)
       val s = ConnectedComponents.labelSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s

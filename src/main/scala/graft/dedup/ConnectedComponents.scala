@@ -2,16 +2,34 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanShim
 import org.apache.spark.sql.types.DecimalType
 
 /** Iterative self-join connected components (min-label propagation with
-  * pointer jumping), pure DataFrame — SURVEY.md §2.2 P9.
+  * root hooking and pointer jumping), pure DataFrame — SURVEY.md §2.2 P9.
   *
   * Discipline grafted from the reference's merge-until-fixpoint contract
   * (`FrequentItems.java:292-308`): per-round state is a mergeable (id →
   * min-label) table; rounds are associative label-min joins; convergence is
-  * detected by an exact changed-count. `localCheckpoint` truncates lineage
+  * detected exactly by [[labelSum]]. `localCheckpoint` truncates lineage
   * each round (iterative joins otherwise stack exponentially deep plans).
+  *
+  * A round is hook-then-shortcut (Shiloach–Vishkin, J. Algorithms 1982;
+  * Kiveris et al., SoCC 2014): every vertex takes the minimum label of its
+  * neighbourhood, every vertex's OLD label (the root of its label tree) is
+  * hooked onto that same minimum, and two pointer jumps then shortcut the
+  * label trees. Without the hook the jumps find little to shortcut and the
+  * round count grows with a component's diameter. Simulated on paths of
+  * Murmur3-hashed ids (30 paths each, median rounds up to and including the
+  * first unchanged one): 5 / 6 / 8 rounds at 32 / 256 / 1024 vertices, where
+  * propagate-and-jump alone needs 14.5 / 86 / 311. On the shallow default
+  * mix (160k CorpusGen clips, 685k edges) [[run]] takes 4 rounds, 6
+  * without the hook, at unchanged wall time: the hook's extra O(V) shuffle
+  * per round is paid back by the saved rounds.
+  *
+  * Two invariants keep the [[labelSum]] convergence test exact: labels are
+  * vertex ids with `label(v) ≤ v`, and a vertex's label never increases
+  * from one round to the next.
   *
   * Scale notes (100 TB story):
   *  - vertices are derived from edges only — singleton clips never enter the
@@ -19,8 +37,8 @@ import org.apache.spark.sql.types.DecimalType
   *  - per-vertex degree is bounded by construction upstream
   *    ([[CandidatePairs]] window cap), so no hub vertex dominates a join
   *    key — the usual CC killer — and AQE handles residual imbalance;
-  *  - pointer jumping (label := label(label)) makes rounds O(log diameter):
-  *    ~3 rounds for the chain-stitched giant clusters the corpus plants.
+  *  - the edge table is joined once per round; the hook and the jumps are
+  *    joins of O(vertices) (id, label) tables.
   */
 object ConnectedComponents {
 
@@ -64,46 +82,65 @@ object ConnectedComponents {
 
   /** Neighbor-min propagation — the round's ONLY edge-table join, kept lazy
     * and separate so its plan shape is assertable (PlanSpec: sym streams in
-    * place, never re-exchanged/re-sorted). */
+    * place, never re-exchanged/re-sorted). Each vertex also reports its
+    * current label as `root`: the message of its own self-loop carries it,
+    * so [[hook]] needs no second join. */
   def propagate(sym: DataFrame, labels: DataFrame): DataFrame = {
     import sym.sparkSession.implicits._
     val msgs = sym.join(labels, sym("src") === labels("id"))
-      .select(sym("dst").as("id"), labels("label"))
-    msgs.groupBy($"id").agg(min($"label").as("label"))
+      .select(sym("dst").as("id"), labels("label"), (sym("src") === sym("dst")).as("self"))
+    msgs.groupBy($"id").agg(min($"label").as("label"), min(when($"self", $"label")).as("root"))
   }
 
-  /** One propagation round: neighbor-min label, then two pointer jumps
-    * (label := label(label(label))), quartering the remaining diameter —
-    * the jump joins run on the small (id, label) table, while each saved
-    * round saves a full edge-table propagate join, so two jumps per round
-    * is the cheaper trade (measured on the bench corpus).
+  /** Neighbor-min propagation plus root hooking: each vertex's old label
+    * (its root) also takes the vertex's new minimum, so a whole label tree
+    * moves onto the smaller label in one round instead of one hop per round.
+    * Every propagate row (v, min, root) emits (v, min) and (root, min)
+    * through one explode, so the propagate result, and with it sym, is read
+    * once (Spark does not reuse an exchange above a partitioned checkpoint
+    * leaf, so a second reference would re-run the edge join). Labels are
+    * vertex ids, so hooks add no vertex; they only lower a root to the
+    * minimum of a neighbourhood containing a vertex it labels, so
+    * `label(v) ≤ v` and monotonicity both hold. */
+  def hook(sym: DataFrame, labels: DataFrame): DataFrame =
+    propagate(sym, labels)
+      .select(explode(array(
+        struct(col("id"), col("label")),
+        struct(col("root").as("id"), col("label")))).as("h"))
+      .groupBy(col("h.id").as("id")).agg(min(col("h.label")).as("label"))
+
+  /** One round: propagate and hook, then two pointer jumps
+    * (label := label(label(label))), checkpointed for carrying into the next
+    * round. With one jump the simulated paths above need 5 / 8 / 10 rounds;
+    * each jump is a join of the small label table, each saved round a join
+    * of the edge table.
     *
-    * The propagate result is EAGERLY checkpointed before the jumps: jump()
+    * The hooked table is EAGERLY checkpointed before the jumps: jump()
     * references its input on both sides of a self-join and the two jumps
-    * nest, so a lazy propagate is re-derived by every concurrently
-    * scheduled join branch racing on the uncached partitions — measured 25
+    * nest, so a lazy input is re-derived by every concurrently scheduled
+    * join branch racing on the uncached partitions — measured 25
     * full-edge-table scans per 160k-clip run where the algorithm needs 5.
     * One small eager job pins the O(V) (id, label) table so the round scans
     * the edge table exactly once and the jumps probe a few-MB cache. At
     * 10^12-vertex scale the duplicated propagate joins would re-read TBs of
-    * edges per round — eager is the only shape that survives. */
-  def step(sym: DataFrame, labels: DataFrame): DataFrame =
-    jump(jump(propagate(sym, labels).localCheckpoint(true)))
-
-  /** Count of vertices whose label changed between rounds (exact convergence
-    * signal; both inputs expected checkpointed). Retained for tests; the run
-    * loop uses [[labelSum]] — same signal, no join. */
-  def changedCount(oldLabels: DataFrame, newLabels: DataFrame): Long =
-    newLabels.as("n")
-      .join(oldLabels.as("o"), col("n.id") === col("o.id"))
-      .where(col("n.label") =!= col("o.label"))
-      .count()
+    * edges per round — eager is the only shape that survives.
+    *
+    * The jumped result is checkpointed (eagerly or lazily, per `eager`) and
+    * its checkpoint's copied plan statistics dropped: a loop that feeds
+    * round k's checkpoint into round k+1 otherwise multiplies the carried
+    * size estimate through every join, so it gains digits geometrically per
+    * round and Catalyst's BigInteger arithmetic on it comes to dominate the
+    * driver (see PlanShim.withoutStats). */
+  def step(sym: DataFrame, labels: DataFrame, eager: Boolean): DataFrame =
+    PlanShim.withoutStats(
+      jump(jump(hook(sym, labels).localCheckpoint(true))).localCheckpoint(eager))
 
   /** Exact sum of labels as a decimal (no 64-bit wrap at 10^12 vertices).
-    * Per-vertex labels are monotone non-increasing under min-propagation and
-    * the vertex set is fixed, so the sum is strictly decreasing until the
-    * fixpoint: sum unchanged ⟺ no label changed. One cheap scan-agg job on
-    * checkpointed partitions instead of a join+count shuffle per round. */
+    * Per-vertex labels are monotone non-increasing under every round (see
+    * [[hook]]) and the vertex set is fixed, so the sum is strictly
+    * decreasing until the fixpoint: sum unchanged ⟺ no label changed. One
+    * cheap scan-agg job on checkpointed partitions instead of a join+count
+    * shuffle per round. */
   def labelSum(labels: DataFrame): java.math.BigDecimal = {
     // coalesce: a global sum over ZERO rows is NULL in Spark — an empty
     // edge set (corpus with no duplicates) must converge, not NPE
@@ -204,15 +241,14 @@ object ConnectedComponents {
       var iter = 0
       var converged = false
       while (!converged && iter < maxIter) {
-        // TWO propagation rounds per convergence check: at worst one extra
-        // (cheap) round runs after the fixpoint. Each step internally runs
-        // one eager job for its propagate table (see [[step]]); the jump
-        // tails stay LAZY — each is referenced exactly once downstream (the
-        // next propagate, or labelSum), so the single materializing action
-        // computes it once and the lazy localCheckpoint caches + truncates
-        // lineage in that same job.
-        val jumped = step(sym, step(sym, labels).localCheckpoint(false))
-          .localCheckpoint(false)
+        // TWO rounds per convergence check: at worst one extra (cheap)
+        // round runs after the fixpoint. Each step internally runs one eager
+        // job for its hooked table (see [[step]]); the jump tails stay LAZY —
+        // each is referenced exactly once downstream (the next propagate, or
+        // labelSum), so the single materializing action computes it once
+        // and the lazy localCheckpoint caches + truncates lineage in that
+        // same job.
+        val jumped = step(sym, step(sym, labels, eager = false), eager = false)
         val s = labelSum(jumped)
         converged = s.compareTo(prevSum) == 0
         prevSum = s

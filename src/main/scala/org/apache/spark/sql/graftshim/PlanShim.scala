@@ -18,6 +18,20 @@ object PlanShim {
       case l: LogicalRDD => l.rdd.id
     }.toSet
 
+  /** A (local)checkpointed DataFrame with its LogicalRDD leaf rebuilt
+    * without the statistics Spark copies into it from the checkpoint's
+    * origin plan. Size estimates multiply through joins, so a loop that
+    * feeds each checkpoint into the plan of the next compounds them: the
+    * carried `sizeInBytes` gains digits geometrically per round until the
+    * optimizer's BigInteger arithmetic dominates the driver. The rebuilt
+    * leaf keeps the RDD, output, partitioning, ordering and constraints;
+    * its size is Spark's default for an unknown relation. */
+  def withoutStats(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[ClassicDataset[_]]
+    val leaf = ds.logicalPlan.asInstanceOf[LogicalRDD]
+    ClassicDataset.ofRows(ds.sparkSession, leaf.copy()(ds.sparkSession, None, Some(leaf.constraints)))
+  }
+
   /** Stop the streaming state-store maintenance thread pool. Called before
     * SparkSession.stop() by drivers that ran a stateful streaming query:
     * otherwise the maintenance task can race the teardown's directory reap

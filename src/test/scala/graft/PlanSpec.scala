@@ -83,6 +83,11 @@ class PlanSpec extends AnyFunSuite with SparkTest {
         assert(!belowJoin.exists(_.nodeName == "Sort"),
           s"sym re-sorted before its propagate join (ordering not preserved):\n$exec")
       }
+      // hook() must read propagate, and with it sym, exactly once: Spark
+      // does not reuse an exchange above a partitioned checkpoint leaf, so a
+      // second reference would rescan sym
+      val hooked = graft.dedup.ConnectedComponents.hook(sym, labels).queryExecution.executedPlan
+      assert(paths(hooked, Nil).size == 1, s"hooked round scans sym more than once:\n$hooked")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)

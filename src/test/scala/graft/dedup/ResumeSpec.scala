@@ -58,6 +58,16 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     assert(SnapshotLog.latestStage(s"$dir/labels").exists(_.stage == "labels_converged"))
   }
 
+  test("killed and completed runs release every RDD they persisted") {
+    val sc = spark.sparkContext
+    val dir = tmpDir("pins")
+    val before = sc.getPersistentRDDs.keySet
+    assert(CheckpointedDedup.run(clips, dir, cfg, stopAfter = Some("labels_round_0")).isEmpty)
+    assert(sc.getPersistentRDDs.keySet == before, "killed run left persisted RDDs")
+    assert(CheckpointedDedup.run(clips, dir, cfg).isDefined)
+    assert(sc.getPersistentRDDs.keySet == before, "completed run left persisted RDDs")
+  }
+
   test("manifests carry per-partition lineage and metrics are appended") {
     val dir = tmpDir("lineage")
     assignmentsOf(dir)
