@@ -379,9 +379,7 @@ object Bench {
       // experiment knobs (default = the frozen config; overriding changes
       // the candidate set and thus the checksum — A/B only, not the gate)
       val cfg = DedupConfig.default.copy(
-        maxBucketSize = prop("graft.cap", DedupConfig.default.maxBucketSize.toString).toInt,
-        fatShuffleFactor = prop("graft.fatFactor",
-          DedupConfig.default.fatShuffleFactor.toString).toInt)
+        maxBucketSize = prop("graft.cap", DedupConfig.default.maxBucketSize.toString).toInt)
       val checksum = assignmentChecksum(DedupPipeline.run(input, cfg))
       val dt = (System.nanoTime() - t0) / 1e9
       // the pipeline self-cleans its internal caches (DedupPipeline.run);

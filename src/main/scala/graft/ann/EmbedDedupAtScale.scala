@@ -23,7 +23,6 @@ object EmbedDedupAtScale {
       .master(s"local[$cores]")
       .appName("graft-embed-dedup-scale")
       .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

@@ -48,8 +48,8 @@ final case class DedupConfig(
       * medium clips with high executor memory); set false beyond that and
       * AQE picks the sort-merge plan instead. */
     broadcastLookups: Boolean = true,
-    /** row-count ceiling above which [[graft.dedup.DedupPipeline.run]]
-      * ignores broadcastLookups=true and falls back to AQE-chosen joins —
+    /** row-count ceiling above which the text lane
+      * ([[graft.dedup.RunScope.textLane]]) ignores broadcastLookups=true and falls back to AQE-chosen joins —
       * a corpus whose slim+norm lookup tables outgrow executor memory must
       * degrade to sort-merge, not OOM the build side. ~5e6 medium clips
       * ≈ low-GB broadcast relations; tune per deployment. */
@@ -67,16 +67,6 @@ final case class DedupConfig(
       * bench graph is ~5x this ceiling and always takes it). Output is
       * bit-identical either way (checksum- and oracle-gated). */
     ccLocalMaxEdges: Long = 100000L,
-    /** shuffle-partition multiplier for the pipeline's FAT stages (bucket
-      * pair generation + pair aggregation + verification): these few stages
-      * carry nearly all the task time, and at partitions == cores one
-      * straggler (a partition that drew the hottest bucket keys) holds
-      * every other core idle for the stage tail. Factor 2 halves the
-      * expected tail at ~0.2 core-sec of fixed per-task cost. The CC loop
-      * and output stages stay at the unmultiplied clamp (their per-stage
-      * work is tiny; extra tasks there are pure scheduling overhead).
-      * Results are partitioning-independent (checksum-gated). */
-    fatShuffleFactor: Int = 1,
     /** exact 64-bit id guarantee: detect hash_id collisions across distinct
       * clip_ids (one slim map-side-combined aggregation at ingest) and
       * deterministically re-key the colliding clips

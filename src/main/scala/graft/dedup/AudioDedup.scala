@@ -5,7 +5,6 @@ import graft.core.DedupConfig
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Audio-content near-duplicate clustering — the WAVEFORM counterpart of the
   * transcript [[DedupPipeline]]: clips whose decoded audio matches are
@@ -103,35 +102,15 @@ object AudioDedup {
       .select(col("a"), col("b"))
   }
 
-  def run(clips: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame = {
-    val spark = clips.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    // clamp shuffle width to the input (same rationale as DedupPipeline.run:
-    // a 500-clip query in a 32-partition session is all task overhead)
-    val nRows = clips.count()
-    val p = math.max(2L, math.min(prev.toLong, nRows / 2000L + 1L))
-    spark.conf.set(key, p.toString)
-    val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-    try {
-      val feats = features(clips, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-      val edges = verifiedEdges(feats, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-      val edgeCount = edges.count()
+  def run(clips: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame =
+    RunScope(clips) { (_, _) =>
+      val feats = RunScope.persist(features(clips, cfg))
+      val edges = RunScope.persist(verifiedEdges(feats, cfg))
       val labels =
-        if (edgeCount <= cfg.ccLocalMaxEdges) ConnectedComponents.runLocal(edges)
+        if (edges.count() <= cfg.ccLocalMaxEdges) ConnectedComponents.runLocal(edges)
         else ConnectedComponents.run(edges, maxIter = 50)
-      val out = DedupPipeline
+      Some(DedupPipeline
         .assignments(feats.select(col("clip_id"), col("id")), labels)
-        .localCheckpoint(true)
-      feats.unpersist(blocking = false)
-      edges.unpersist(blocking = false)
-      val keep = org.apache.spark.sql.graftshim.PlanShim.checkpointRddIds(out)
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!preexisting.contains(id) && !keep.contains(id)) rdd.unpersist(blocking = false)
-      }
-      out
-    } finally {
-      spark.conf.set(key, prev)
-    }
-  }
+        .localCheckpoint(true))
+    }.get
 }

@@ -48,40 +48,6 @@ object CandidatePairs {
 
   final case class Bucket(key: Long, id: Long, lane: Int)
 
-  /** Detect bucket keys with (estimated) multiplicity >= threshold using a
-    * distributed-merged FreqSketch — one tiny partial sketch per partition,
-    * O(k) driver bytes, no per-key shuffle. The 10^12-row path; estimates
-    * near the threshold depend on partitioning (merge error), so the
-    * default pipeline uses [[hotKeysExact]] for bit-determinism. */
-  def hotKeysSketch(buckets: Dataset[Bucket], threshold: Long, sketchK: Int = 4096): Map[Long, Long] = {
-    import buckets.sparkSession.implicits._
-    val partials: Array[Array[Byte]] = buckets.select($"key").as[Long]
-      .mapPartitions { it =>
-        val sk = FreqSketch(sketchK)
-        it.foreach(k => sk.update(k))
-        Iterator.single(sk.serialize())
-      }.collect()
-    val merged = partials.foldLeft(FreqSketch(sketchK)) { (acc, bytes) =>
-      acc.merge(FreqSketch.deserialize(bytes))
-    }
-    merged.frequentKeys(threshold).map { case (key, _, _, ub) => key -> ub }.toMap
-  }
-
-  /** Exact hot keys: map-side-combined count per key, filtered to the hot
-    * tail before collect (the collected set is small by definition —
-    * there are at most totalRows/threshold hot keys). */
-  def hotKeysExact(buckets: Dataset[Bucket], threshold: Long): Map[Long, Long] = {
-    import buckets.sparkSession.implicits._
-    buckets.groupBy($"key").count()
-      .where($"count" >= threshold)
-      .as[(Long, Long)].collect().toMap
-  }
-
-  def hotKeys(buckets: Dataset[Bucket], threshold: Long,
-              cfg: DedupConfig): Map[Long, Long] =
-    if (cfg.sketchHotKeys) hotKeysSketch(buckets, threshold)
-    else hotKeysExact(buckets, threshold)
-
   /** Stitch the salt groups of one split hot bucket: every group minimum
     * pairs with the smallest minimum (a STAR, not a path). Same candidate
     * count as the old adjacent-rep chain, but the stitched component has
@@ -500,10 +466,9 @@ object CandidatePairs {
   private[dedup] def pairsPackedSketch(packedIn: DataFrame, cfg: DedupConfig): DataFrame = {
     val spark = packedIn.sparkSession
     import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
     val cap = cfg.maxBucketSize
 
-    val packed = packedIn.persist(StorageLevel.MEMORY_AND_DISK)
+    val packed = RunScope.persist(packedIn)
 
     // salt count for a key with `cnt` members: ceil-ish cnt/cap in [2, MaxSalts]
     def saltCount(cnt: Column): Column = greatest(lit(2L),

@@ -50,64 +50,16 @@ object CheckpointedDedup {
 
   /** Run (or resume) the pipeline. `stopAfter` aborts after the named stage
     * commits — the kill/restart test hook. Returns assignments unless
-    * stopped early.
-    *
-    * Cache lifecycle: every RDD the run persists (sym, the per-round label
-    * checkpoints, their internal pins) is released before it returns, killed
-    * or complete — the returned assignments read from their snapshot. */
+    * stopped early. Session conf and cache release follow
+    * [[RunScope.textLane]], the same as DedupPipeline.run: killed or
+    * complete, the run leaves no cache behind (sym, the per-round label
+    * checkpoints, their internal pins) — the returned assignments read from
+    * their snapshot. */
   def run(clips: DataFrame, workDir: String,
           cfg: DedupConfig = DedupConfig.default,
           stopAfter: Option[String] = None,
-          maxCcRounds: Int = 50): Option[DataFrame] = {
-    // same session scoping AND the same broadcast graceful degrade as
-    // DedupPipeline.run (ADVICE r3): the composed stages carry explicit
-    // broadcast hints, so AQE re-planning is pure serial latency at pinned
-    // scale and the static planner must not broadcast per-round label
-    // tables (O(vertices) — see ConnectedComponents.run); but above the
-    // row ceiling the broadcast pin must fall back to AQE-chosen joins —
-    // a resumable run over a huge corpus degrades to sort-merge, it does
-    // not OOM the build side where the non-checkpointed path would not.
-    val spark = clips.sparkSession
-    val nRows = clips.count()
-    val cfgEff =
-      if (cfg.broadcastLookups && nRows > cfg.broadcastLookupMaxRows)
-        cfg.copy(broadcastLookups = false)
-      else cfg
-    // Size shuffle parallelism to the INPUT, mirroring DedupPipeline.run:
-    // on a session sized for a big corpus (e.g. 32 partitions), a small
-    // checkpointed run otherwise schedules ~100 stages of 32 near-empty
-    // tasks each — measured at n=1000: ~80% of the lifecycle's task CPU was
-    // fixed per-task cost (parquet reader init, task deser), not work. The
-    // clamp is scale-adaptive (min(session, rows/2000+1)): at production
-    // row counts it is a no-op and the session's own sizing wins.
-    val pKey = "spark.sql.shuffle.partitions"
-    val prevP = spark.conf.get(pKey)
-    val p = math.max(2L, math.min(prevP.toLong, nRows / 2000L + 1L)).toInt
-    spark.conf.set(pKey, p.toString)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevAqe = spark.conf.getOption(aqeKey)
-    val prevBc = spark.conf.getOption(bcKey)
-    if (cfgEff.broadcastLookups) spark.conf.set(aqeKey, "false")
-    spark.conf.set(bcKey, "-1")
-    val sc = spark.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
-    try runStages(clips, workDir, cfgEff, stopAfter, maxCcRounds, p)
-    finally {
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!preexisting.contains(id)) rdd.unpersist(blocking = false)
-      }
-      spark.conf.set(pKey, prevP)
-      prevAqe match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None => spark.conf.unset(aqeKey)
-      }
-      prevBc match {
-        case Some(v) => spark.conf.set(bcKey, v)
-        case None => spark.conf.unset(bcKey)
-      }
-    }
-  }
+          maxCcRounds: Int = 50): Option[DataFrame] =
+    RunScope.textLane(clips, cfg)(runStages(clips, workDir, _, stopAfter, maxCcRounds, _))
 
   private def runStages(clips: DataFrame, workDir: String,
                         cfg: DedupConfig,
@@ -129,19 +81,7 @@ object CheckpointedDedup {
       DedupPipeline.features(clips, cfg).repartition(p)
     }
     if (stopAfter.contains("features")) return None
-    features.persist()
-    // every exit below releases the features cache: the returned
-    // assignments read from their committed snapshot, and a leaked entry
-    // would otherwise be served (via CacheManager plan-matching) to the
-    // NEXT lifecycle over the same workDir path
-    try runCc(clips, workDir, cfg, stopAfter, maxCcRounds, p, features)
-    finally features.unpersist(blocking = false)
-  }
-
-  private def runCc(clips: DataFrame, workDir: String, cfg: DedupConfig,
-                    stopAfter: Option[String], maxCcRounds: Int, p: Int,
-                    features: DataFrame): Option[DataFrame] = {
-    val spark = clips.sparkSession
+    RunScope.persist(features)
     val edges = stage(workDir, "edges", Seq("features"), spark) {
       DedupPipeline.verifiedEdges(features, DedupPipeline.candidates(features, cfg), cfg)
     }
@@ -173,7 +113,7 @@ object CheckpointedDedup {
     }
     // sym is only needed when rounds remain — an already-converged resume
     // must not pay its eager repartition+sort materialization
-    lazy val sym = ConnectedComponents.checkpointedSym(edges, math.max(2, p))
+    lazy val sym = ConnectedComponents.checkpointedSym(edges, p)
     if (labels == null) labels = ConnectedComponents.initLabels(sym).localCheckpoint(true)
     // convergence via the monotone label-sum invariant (one scan-agg per
     // round) — exact, no per-round join (see ConnectedComponents.labelSum)

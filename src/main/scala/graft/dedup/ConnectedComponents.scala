@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.PlanShim
 import org.apache.spark.sql.types.DecimalType
@@ -155,8 +155,8 @@ object ConnectedComponents {
     * bit-identical to the distributed loop's fixpoint.
     *
     * Scale contract: this is the small-graph fast path ONLY — callers gate
-    * on an edge count they already have (DedupPipeline counts edges to
-    * scope its conf anyway) with a threshold whose collect is trivially
+    * on an edge count they already have (the count that materializes
+    * their persisted edges) with a threshold whose collect is trivially
     * driver-safe (10^5 edges = 1.6 MB). The iterative loop in [[run]]
     * remains THE production path and the one the 160k-clip bench exercises
     * (~5x10^5 edges); a tiny dedup tail-graph simply does not need a
@@ -208,33 +208,13 @@ object ConnectedComponents {
   /** @param edges DataFrame with long columns (a, b) — undirected unique pairs.
     * @return DataFrame (id: Long, label: Long) — label = min id in component.
     */
-  def run(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    // AQE re-plans every exchange as its own mini-job: across ~5 rounds x
-    // ~5 exchanges that is ~25 serial driver round-trips for label tables
-    // of a few MB — pure scheduling latency at any core count. The loop's
-    // plans are tiny and regular; static planning runs each round as ONE
-    // job. (Restored after the loop — the big relational stages DO want
-    // AQE's runtime broadcast decisions.)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.getOption(aqeKey)
-    spark.conf.set(aqeKey, "false")
-    // The jump/step joins operate on per-round (id, label) tables. The
-    // static planner sees small stats and picks BroadcastHashJoin — but the
-    // label table is REBUILT every round, so each round pays two serial
-    // broadcast builds (measured at 160k clips: 8 extra jobs per run, each
-    // re-reading ~122 MB of lineage, parUse 0.76→0.86 once removed). At
-    // production scale the label table is O(vertices) and could never be
-    // broadcast anyway — shuffle joins are the only shape that survives
-    // 10^12 rows, so force them at every scale.
-    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevBc = spark.conf.getOption(bcKey)
-    spark.conf.set(bcKey, "-1")
-    try {
+  def run(edges: DataFrame, maxIter: Int = 50): DataFrame =
+    // tiny, regular per-round plans: see RunScope.StaticJoins
+    RunScope.withConf(edges.sparkSession, RunScope.StaticJoins) {
       // previously the 25 MB sym table was re-exchanged ~4x per round (the
       // 3-way union in symmetrize has no useful partitioning); now only the
       // few-MB label table moves per round — see [[checkpointedSym]]
-      val p = math.max(2, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      val p = math.max(2, edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
       val sym = checkpointedSym(edges, p)
       var labels = initLabels(sym).localCheckpoint(true)
       var prevSum = labelSum(labels)
@@ -256,15 +236,5 @@ object ConnectedComponents {
         iter += 1
       }
       labels
-    } finally {
-      prevAqe match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None => spark.conf.unset(aqeKey)
-      }
-      prevBc match {
-        case Some(v) => spark.conf.set(bcKey, v)
-        case None => spark.conf.unset(bcKey)
-      }
     }
-  }
 }

@@ -2,9 +2,8 @@ package graft.dedup
 
 import graft.core.DedupConfig
 import graft.functions.GraftFunctions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The end-to-end near-duplicate detection + clustering pipeline
   * (SURVEY.md §2.2 P1-P11) over the input-hint-shaped clips table.
@@ -131,7 +130,7 @@ object DedupPipeline {
     // carries (a, b, 3 booleans) — not the simhash/nsh/nlen columns the
     // flags were computed from (the unprojected version cached ~6x the
     // bytes and re-read them twice, a measured bandwidth hit at bench scale)
-    val slim = cands
+    val slim = RunScope.persist(cands
       .join(sa0, col("a") === col("sa.id"))
       .join(sb0, col("b") === col("sb.id"))
       .select(col("a"), col("b"), col("lane"), col("fps_hits"),
@@ -154,8 +153,7 @@ object DedupPipeline {
         (col("lane").bitwiseAND(lit(LaneFps)) =!= 0) &&
           col("fps_hits") >= (if (cfg.sketchHotKeys) 1 else cfg.minFpsHits) &&
           least(col("nlen_a"), col("nlen_b")) >= cfg.minContainLen)
-      .select(col("a"), col("b"), col("ham_ok"), col("jac_possible"), col("con_possible"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("a"), col("b"), col("ham_ok"), col("jac_possible"), col("con_possible")))
 
     val hamEdges = slim.where(col("ham_ok")).select(col("a"), col("b"))
 
@@ -256,104 +254,17 @@ object DedupPipeline {
   /** Full run: returns (clip_id, id, cluster, rep_clip_id, is_rep). `cluster`
     * is the min hash-id in the component; `rep_clip_id` the lexicographically
     * smallest clip_id in the cluster (deterministic canonical pick, P11).
-    *
-    * Session scoping: run() temporarily overrides the session-global
-    * `spark.sql.shuffle.partitions` and (at broadcast-pinned scale)
-    * `spark.sql.adaptive.enabled` for its duration — it must OWN the
-    * SparkSession while running;
-    * callers with concurrent queries on the same session should hand it a
-    * `spark.newSession()` clone.
-    *
-    * Cache lifecycle: every internal persist/localCheckpoint is released
-    * before returning; only the returned table's own (eager) checkpoint
-    * stays pinned — the caller frees it by letting the DataFrame go after
-    * consumption (`out.unpersist()` equivalent: its backing RDD is the only
-    * run()-created entry left in `sc.getPersistentRDDs`). */
-  def run(clips: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame = {
-    val spark = clips.sparkSession
-    val sc = spark.sparkContext
-    // Size the pipeline's shuffle parallelism to the INPUT, not the
-    // session: at 5k documents a 32-partition session turns the ~40-job
-    // pipeline into thousands of near-empty tasks whose fixed scheduling/
-    // deserialize cost dwarfs the work (measured: 5k docs took 71 task-CPU
-    // seconds, almost all overhead). parquet count() is footer-metadata
-    // fast; results are partitioning-independent (checksum-gated), so the
-    // clamp only changes wall time. The final assignments table is
-    // materialized eagerly so every internal action runs under the clamp.
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val nRows = clips.count()
-    val p = math.max(2L, math.min(prev.toLong, nRows / 2000L + 1L))
-    // fat stages (pair gen / pair agg / verify) plan under p * factor —
-    // stage-tail insurance against bucket-key skew; everything downstream
-    // of the edge materialization plans under the plain clamp (see below)
-    spark.conf.set(key, (p * math.max(1, cfg.fatShuffleFactor)).toString)
-    // broadcast-pinned verification lookups are only safe while one executor
-    // can hold the corpus' slim+norm tables; beyond the row ceiling fall
-    // back automatically and let AQE pick the join strategy (ADVICE r2:
-    // the default must degrade gracefully, not OOM).
-    val cfgEff =
-      if (cfg.broadcastLookups && nRows > cfg.broadcastLookupMaxRows)
-        cfg.copy(broadcastLookups = false)
-      else cfg
-    // With the lookup build sides pinned by broadcast hints, every join
-    // strategy in the pipeline is already decided at plan time and the
-    // exchange partitioning is the fixed clamp above — AQE's per-exchange
-    // materialize-and-replan buys nothing and costs a serial driver
-    // round-trip per query stage (measured A/B at 8 cores, same corpus,
-    // identical checksums: 41 jobs/75 stages with AQE vs 20/63 without,
-    // same summed task run-time, ~5% less wall). At huge-corpus scale the
-    // broadcast pin auto-falls-back (cfgEff above) and AQE stays ON — there
-    // its runtime skew-join splitting is worth the latency.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.getOption(aqeKey)
-    if (cfgEff.broadcastLookups) spark.conf.set(aqeKey, "false")
-    // Every broadcast the pipeline WANTS is an explicit broadcast() hint
-    // (hints ignore this threshold); what the auto threshold adds is
-    // unwanted static-planner broadcasts of per-round or per-cluster tables
-    // (CC jump labels, assignments reps) that are rebuilt each use — serial
-    // build latency here, an O(vertices) broadcast OOM at production scale.
-    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevBc = spark.conf.getOption(bcKey)
-    spark.conf.set(bcKey, "-1")
-    val preexisting = sc.getPersistentRDDs.keySet
-    try {
-      val f = features(clips, cfgEff).persist(StorageLevel.MEMORY_AND_DISK)
-      val cands = candidates(f, cfgEff)
-      val edges = verifiedEdges(f, cands, cfgEff).persist(StorageLevel.MEMORY_AND_DISK)
-      // materialize the edge persist NOW: physical plans are drawn at action
-      // time, so this is the boundary between the fat-stage conf scope above
-      // (pair gen + verification execute inside this count) and the plain
-      // clamp the CC loop and output stages plan under below
-      val edgeCount = edges.count()
-      spark.conf.set(key, p.toString)
+    * Session conf and cache release follow [[RunScope.textLane]]: the
+    * returned table's own (eager) checkpoint is the only cache left. */
+  def run(clips: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame =
+    RunScope.textLane(clips, cfg) { (eff, _) =>
+      val f = RunScope.persist(features(clips, eff))
+      val edges = RunScope.persist(verifiedEdges(f, candidates(f, eff), eff))
       val labels =
-        if (edgeCount <= cfgEff.ccLocalMaxEdges) ConnectedComponents.runLocal(edges)
+        if (edges.count() <= eff.ccLocalMaxEdges) ConnectedComponents.runLocal(edges)
         else ConnectedComponents.run(edges, maxIter = 50)
-      val out = assignments(f, labels).localCheckpoint(true)
-      // release every cache the pipeline created (VERDICT r2: f/edges and
-      // the CC-round localCheckpoint RDDs leaked into long-lived sessions):
-      // the eager checkpoint above has materialized `out`, so nothing
-      // downstream re-reads them. Keep only out's own backing RDD(s).
-      f.unpersist(blocking = false)
-      edges.unpersist(blocking = false)
-      val keep = org.apache.spark.sql.graftshim.PlanShim.checkpointRddIds(out)
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!preexisting.contains(id) && !keep.contains(id)) rdd.unpersist(blocking = false)
-      }
-      out
-    } finally {
-      spark.conf.set(key, prev)
-      prevAqe match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None => spark.conf.unset(aqeKey)
-      }
-      prevBc match {
-        case Some(v) => spark.conf.set(bcKey, v)
-        case None => spark.conf.unset(bcKey)
-      }
-    }
-  }
+      Some(assignments(f, labels).localCheckpoint(true))
+    }.get
 
   /** Join clip ids to CC labels; absent vertices are their own singleton
     * cluster. Canonical representative = min clip_id per cluster via a

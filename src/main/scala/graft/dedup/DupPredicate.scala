@@ -51,11 +51,4 @@ object DupPredicate {
     val (short, long) = if (normA.length <= normB.length) (normA, normB) else (normB, normA)
     short.length >= cfg.minContainLen && long.contains(short)
   }
-
-  /** Convenience for the oracle: full evaluation from raw transcripts. */
-  def isDupRaw(rawA: String, rawB: String, cfg: DedupConfig): Boolean = {
-    val na = TextFeatures.normalize(rawA)
-    val nb = TextFeatures.normalize(rawB)
-    isDup(na, nb, TextFeatures.simhash64(na, cfg.seed), TextFeatures.simhash64(nb, cfg.seed), cfg)
-  }
 }

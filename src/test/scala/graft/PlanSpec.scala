@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.CorpusGen
-import graft.dedup.DedupPipeline
+import graft.dedup.{DedupPipeline, RunScope}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -56,11 +56,7 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
     val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b")
     val p = math.max(2, spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    RunScope.withConf(spark, RunScope.StaticJoins) {
       val sym = graft.dedup.ConnectedComponents.checkpointedSym(edges, p)
       val labels = graft.dedup.ConnectedComponents.initLabels(sym).localCheckpoint(true)
       // propagate() is the round's only edge-table join (step() eagerly
@@ -88,9 +84,6 @@ class PlanSpec extends AnyFunSuite with SparkTest {
       // second reference would rescan sym
       val hooked = graft.dedup.ConnectedComponents.hook(sym, labels).queryExecution.executedPlan
       assert(paths(hooked, Nil).size == 1, s"hooked round scans sym more than once:\n$hooked")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
 

@@ -1,7 +1,9 @@
 package graft.ann
 
 import graft.SparkTest
+import graft.core.DedupConfig
 import graft.corpus.EmbedGen
+import org.apache.spark.sql.graftshim.PlanShim
 import org.scalatest.funsuite.AnyFunSuite
 
 /** EmbedDedup vs an in-test O(n^2) exact-cosine + union-find oracle on the
@@ -24,13 +26,13 @@ class EmbedDedupSpec extends AnyFunSuite with SparkTest {
     if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
   }
 
+  private val n = 400
+  private val threshold = 0.9
+  private lazy val vecs = EmbedGen.vectors(spark, n.toLong, clusterSize = 20, numPartitions = 8)
+    .select("vec_id", "embedding")
+
   test("clusters equal the brute-force exact-cosine transitive closure") {
     import spark.implicits._
-    val n = 400
-    val threshold = 0.9
-    val vecs = EmbedGen.vectors(spark, n.toLong, clusterSize = 20, numPartitions = 8)
-      .select("vec_id", "embedding")
-
     val rows = vecs.as[(Long, Array[Float])].collect().sortBy(_._1)
     val root = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
@@ -70,5 +72,15 @@ class EmbedDedupSpec extends AnyFunSuite with SparkTest {
     val b = EmbedDedup.clusters(vecs.repartition(7), threshold = 0.9)
       .as[(Long, Long, Boolean)].collect().toSet
     assert(a == b)
+  }
+
+  test("distributed CC path releases every RDD but the returned labels") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = EmbedDedup.clusters(vecs, threshold = threshold,
+      cfg = DedupConfig.default.copy(ccLocalMaxEdges = 0))
+    val kept = PlanShim.checkpointRddIds(out)
+    assert(kept.nonEmpty, "expected the distributed CC's label checkpoint")
+    assert(sc.getPersistentRDDs.keySet == before ++ kept)
   }
 }

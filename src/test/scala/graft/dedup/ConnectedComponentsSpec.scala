@@ -59,11 +59,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTest {
     // origin plan's size estimate, which multiplies through the round's
     // joins: past 256 bits by round 2, millions of digits by round 10.
     // Planned under the conf both CC loops set: static, no broadcast.
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    RunScope.withConf(spark, RunScope.StaticJoins) {
       val sym = ConnectedComponents.checkpointedSym(path(hashedIds(64, 3L)).toDF("a", "b"), 4)
       var labels = ConnectedComponents.initLabels(sym).localCheckpoint(true)
       for (round <- 1 to 12) {
@@ -72,9 +68,6 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTest {
         assert(bits < 256, s"label table size estimate has $bits bits after round $round")
       }
       assert(labels.select("label").distinct().count() == 1)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
 

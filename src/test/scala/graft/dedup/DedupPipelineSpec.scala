@@ -3,7 +3,13 @@ package graft.dedup
 import graft.SparkTest
 import graft.core.DedupConfig
 import graft.corpus.CorpusGen
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftshim.PlanShim
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** The BASELINE.json headline gate: dup-pair recall >= 0.99 of the Spark
   * pipeline vs the brute-force reference clustering at the same frozen
@@ -22,20 +28,43 @@ class DedupPipelineSpec extends AnyFunSuite with SparkTest {
 
   private lazy val oracleClusters: Array[Int] = BruteForceOracle.clusters(transcripts, cfg)
 
-  private lazy val pipelineClusters: Array[Int] = {
+  private lazy val clips: DataFrame = {
     import spark.implicits._
     // text-only clip frame (audio bytes not needed for clustering; the
     // pipeline only selects clip_id/transcript anyway — column pruning)
-    val clips = spark.createDataset(
+    spark.createDataset(
       transcripts.zipWithIndex.map { case (t, i) => (CorpusGen.clipId(i.toLong), t) }.toSeq
     ).toDF("clip_id", "transcript")
-    val assign = DedupPipeline.run(clips, cfg)
-      .select("clip_id", "cluster").collect()
+  }
+
+  private def clusterOf(assign: DataFrame): Map[String, Long] =
+    assign.select("clip_id", "cluster").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private lazy val defaultAssign: Map[String, Long] = clusterOf(DedupPipeline.run(clips, cfg))
+
+  private lazy val pipelineClusters: Array[Int] = {
     // relabel clusters as int group ids for comparison
-    val labels = Array.tabulate(n)(i => assign(CorpusGen.clipId(i.toLong)))
+    val labels = Array.tabulate(n)(i => defaultAssign(CorpusGen.clipId(i.toLong)))
     val remap = labels.distinct.zipWithIndex.toMap
     labels.map(remap)
+  }
+
+  /** `body`'s result and the executed plans of its queries that verify
+    * Jaccard pairs (graft_jaccard_ge). */
+  private def verifyPlans[T](body: => T): (T, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      PlanShim.waitListenerBus(spark.sparkContext)
+      (out, plans.asScala.filter(_.contains("graft_jaccard_ge")).toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("oracle finds a non-trivial planted cluster structure") {
@@ -73,6 +102,20 @@ class DedupPipelineSpec extends AnyFunSuite with SparkTest {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before -- keep
     assert(leaked.isEmpty,
       s"pipeline leaked persistent RDDs: $leaked (VERDICT r2 #2 regression)")
+  }
+
+  test("above the broadcast ceiling both text drivers verify without broadcasts, same assignments") {
+    val low = cfg.copy(broadcastLookupMaxRows = 10)
+    val dir = Files.createTempDirectory("graft-ceiling").toString
+    for ((driver, run) <- Seq[(String, () => DataFrame)](
+        "DedupPipeline" -> (() => DedupPipeline.run(clips, low)),
+        "CheckpointedDedup" -> (() => CheckpointedDedup.run(clips, dir, low).get))) {
+      val (assign, plans) = verifyPlans(clusterOf(run()))
+      assert(plans.nonEmpty, s"$driver: no verify plan captured")
+      plans.foreach(plan => assert(!plan.contains("BroadcastExchange"),
+        s"$driver verified through a broadcast above the ceiling:\n$plan"))
+      assert(assign == defaultAssign, s"$driver assignments differ above the ceiling")
+    }
   }
 
   test("truncation (substring) pairs are recovered via the winnowing lane") {
