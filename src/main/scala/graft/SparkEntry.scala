@@ -3,7 +3,7 @@ package graft
 import graft.ann.Ann
 import graft.core.DedupConfig
 import graft.corpus.CorpusGen
-import graft.dedup.DedupPipeline
+import graft.dedup.{DedupPipeline, RunScope}
 import graft.functions.GraftFunctions._
 import graft.functions.SketchAggregates._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -24,13 +24,13 @@ object SparkEntry {
   /** Drain a bounded streaming query (AvailableNow) with stream-sized state
     * parallelism and a tmpfs-backed checkpoint.
     *
-    * - State-store partitions are clamped (default 8, `-Dgraft.
-    *   streamShufflePartitions`): the state op's task count should track
-    *   the STATE size (a few thousand keys here), not the session's core
-    *   count — at 32 partitions each micro-batch paid 32 state-store
-    *   open/commit round-trips of which ~4/5 held no state (measured on
-    *   s02: stage run 13.0s vs cpu 1.2s, nearly all state-commit I/O
-    *   wait). Production sizing scales this with keyspace, not cores.
+    * - State-store partitions are clamped to 8: the state op's task count
+    *   should track the STATE size (a few thousand keys here), not the
+    *   session's core count — at 32 partitions each micro-batch paid 32
+    *   state-store open/commit round-trips of which ~4/5 held no state
+    *   (measured on s02: stage run 13.0s vs cpu 1.2s, nearly all
+    *   state-commit I/O wait). Production sizing scales this with
+    *   keyspace, not cores.
     * - The checkpoint lives under /dev/shm (fresh random dir per
     *   invocation, deleted after the drain): the HDFS-backed state store
     *   fsyncs delta files per partition per batch, which on /tmp is disk
@@ -42,21 +42,17 @@ object SparkEntry {
   private def runStream(s: SparkSession, df: DataFrame, sink: String,
                         mode: String): Unit = {
     import org.apache.spark.sql.streaming.Trigger
-    val pKey = "spark.sql.shuffle.partitions"
-    val prevP = s.conf.get(pKey)
-    s.conf.set(pKey, sys.props.getOrElse("graft.streamShufflePartitions", "8"))
     val ckptBase = java.nio.file.Paths.get(
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
         System.getProperty("java.io.tmpdir"))
     val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, s"graft-$sink-ckpt")
-    try {
+    try RunScope.withConf(s, Map("spark.sql.shuffle.partitions" -> "8")) {
       val q = df.writeStream.format("memory").queryName(sink)
         .option("checkpointLocation", ckpt.toString)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       q.stop()
     } finally {
-      s.conf.set(pKey, prevP)
       try java.nio.file.Files.walk(ckpt)
         .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))

@@ -69,12 +69,7 @@ object EmbedDedup {
       .where(cosine_sim(col("a_emb"), col("b_emb")) >= threshold)
       .select(col("a"), col("b")))
 
-    // same small-graph gating as DedupPipeline.run: the driver union-find
-    // is bit-identical to the distributed fixpoint (min of a component is
-    // union-order-independent) and skips ~15 scheduler round-trips
-    val labels =
-      if (edges.count() <= cfg.ccLocalMaxEdges) ConnectedComponents.runLocal(edges)
-      else ConnectedComponents.run(edges, maxIter = 50)
+    val labels = ConnectedComponents.labels(edges, cfg)
 
     // labels are materialized by here (runLocal collects; run checkpoints
     // each round): the returned join reads only them, the one cache

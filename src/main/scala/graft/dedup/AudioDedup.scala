@@ -106,11 +106,8 @@ object AudioDedup {
     RunScope(clips) { (_, _) =>
       val feats = RunScope.persist(features(clips, cfg))
       val edges = RunScope.persist(verifiedEdges(feats, cfg))
-      val labels =
-        if (edges.count() <= cfg.ccLocalMaxEdges) ConnectedComponents.runLocal(edges)
-        else ConnectedComponents.run(edges, maxIter = 50)
       Some(DedupPipeline
-        .assignments(feats.select(col("clip_id"), col("id")), labels)
+        .assignments(feats.select(col("clip_id"), col("id")), ConnectedComponents.labels(edges, cfg))
         .localCheckpoint(true))
     }.get
 }

@@ -3,7 +3,6 @@ package graft.dedup
 import graft.core.DedupConfig
 import graft.snapshot.SnapshotLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Snapshot-aligned, resumable execution of the dedup pipeline
@@ -14,9 +13,15 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * files + versioned manifest + atomic latest pointer). A killed run leaves
   * either a fully committed snapshot (resume skips the stage) or an
   * uncommitted torn write (resume recomputes the stage) — never a half-read
-  * state. CC label tables commit once per round into the same snapshot
-  * table, so a kill mid-iteration resumes from the last completed round;
-  * the converged round is marked in its manifest stage name.
+  * state.
+  *
+  * CC is [[ConnectedComponents.run]]'s loop: its per-check callback commits
+  * each round's labels as the next version of one snapshot table,
+  * `labels_round_<round>` or, at the fixpoint, `labels_converged`, so a
+  * kill mid-iteration resumes from the last committed round. This driver
+  * never takes the `ccLocalMaxEdges` union-find shortcut of the plain
+  * drivers: a driver-local contraction commits no rounds, and resume
+  * granularity (and every kill at `labels_round_0`) needs them.
   *
   * Per-partition lineage = `part_rows` in each manifest; run metrics
   * (stage, rows, elapsed) are appended to `<workDir>/metrics.jsonl`.
@@ -57,14 +62,12 @@ object CheckpointedDedup {
     * their snapshot. */
   def run(clips: DataFrame, workDir: String,
           cfg: DedupConfig = DedupConfig.default,
-          stopAfter: Option[String] = None,
-          maxCcRounds: Int = 50): Option[DataFrame] =
-    RunScope.textLane(clips, cfg)(runStages(clips, workDir, _, stopAfter, maxCcRounds, _))
+          stopAfter: Option[String] = None): Option[DataFrame] =
+    RunScope.textLane(clips, cfg)(runStages(clips, workDir, _, stopAfter, _))
 
   private def runStages(clips: DataFrame, workDir: String,
                         cfg: DedupConfig,
                         stopAfter: Option[String],
-                        maxCcRounds: Int,
                         p: Int): Option[DataFrame] = {
     val spark = clips.sparkSession
 
@@ -89,52 +92,21 @@ object CheckpointedDedup {
 
     // ---- CC rounds, one snapshot version per round -----------------------
     val labelsDir = stageTable(workDir, "labels")
-    val edgeRows = SnapshotLog.manifest(stageTable(workDir, "edges")).map(_.rows).getOrElse(0L)
-    if (edgeRows == 0L) {
-      // no duplicate pairs at all: every clip is its own singleton cluster
-      import org.apache.spark.sql.types._
-      val emptyLabels = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("id", LongType), StructField("label", LongType))))
-      val assignments = stage(workDir, "assignments", Seq("features"), spark) {
-        DedupPipeline.assignments(features, emptyLabels)
-      }
-      return Some(assignments)
-    }
-    var labels: DataFrame = null
-    var round = 0
-    var converged = false
-    SnapshotLog.latestStage(labelsDir) match {
-      case Some(snap) =>
-        labels = SnapshotLog.read(spark, labelsDir).localCheckpoint(true)
-        round = snap.version + 1
-        converged = snap.stage == "labels_converged"
-      case None => ()
-    }
-    // sym is only needed when rounds remain — an already-converged resume
-    // must not pay its eager repartition+sort materialization
-    lazy val sym = ConnectedComponents.checkpointedSym(edges, p)
-    if (labels == null) labels = ConnectedComponents.initLabels(sym).localCheckpoint(true)
-    // convergence via the monotone label-sum invariant (one scan-agg per
-    // round) — exact, no per-round join (see ConnectedComponents.labelSum)
-    var prevSum = if (converged) null else ConnectedComponents.labelSum(labels)
-    while (!converged && round < maxCcRounds) {
-      val t0 = System.nanoTime()
-      val next = ConnectedComponents.step(sym, labels, eager = true)
-      val s = ConnectedComponents.labelSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
+    val start = SnapshotLog.latestStage(labelsDir).map(snap => ConnectedComponents.Start(
+      SnapshotLog.read(spark, labelsDir).localCheckpoint(true), snap.version + 1,
+      snap.stage == "labels_converged"))
+    var t0 = System.nanoTime()
+    val labels = ConnectedComponents.run(edges, start, onCheck = { (next, round, converged, sum) =>
       val stageName = if (converged) "labels_converged" else s"labels_round_$round"
+      // `next` is already checkpointed and bit-identical to the committed
+      // parquet (long columns round-trip exactly): the loop carries it
+      // forward, which skips a read-back + re-materialization per round
       val snap = SnapshotLog.commit(next, labelsDir, stageName, Seq("edges"))
       metric(workDir, stageName, snap.rows, (System.nanoTime() - t0) / 1000000,
-        s""","label_sum":$s""")
-      // `next` is already eagerly checkpointed and bit-identical to the
-      // committed parquet (long columns round-trip exactly): carrying it
-      // forward skips a read-back + re-materialization per round
-      labels = next
-      round += 1
-      if (stopAfter.contains(stageName)) return None
-    }
+        s""","label_sum":$sum""")
+      t0 = System.nanoTime()
+      !stopAfter.contains(stageName)
+    })
     if (stopAfter.exists(_.startsWith("labels"))) return None
 
     val assignments = stage(workDir, "assignments", Seq("features", "labels"), spark) {

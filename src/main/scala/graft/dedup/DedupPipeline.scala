@@ -260,10 +260,7 @@ object DedupPipeline {
     RunScope.textLane(clips, cfg) { (eff, _) =>
       val f = RunScope.persist(features(clips, eff))
       val edges = RunScope.persist(verifiedEdges(f, candidates(f, eff), eff))
-      val labels =
-        if (edges.count() <= eff.ccLocalMaxEdges) ConnectedComponents.runLocal(edges)
-        else ConnectedComponents.run(edges, maxIter = 50)
-      Some(assignments(f, labels).localCheckpoint(true))
+      Some(assignments(f, ConnectedComponents.labels(edges, eff)).localCheckpoint(true))
     }.get
 
   /** Join clip ids to CC labels; absent vertices are their own singleton

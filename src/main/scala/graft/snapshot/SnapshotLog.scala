@@ -1,7 +1,7 @@
 package graft.snapshot
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -52,6 +52,12 @@ object SnapshotLog {
     // reads over the files just written — no second scan of the data
     val hconf = df.sparkSession.sparkContext.hadoopConfiguration
     val partCounts = partitionRowCounts(dd, hconf)
+    // zero rows write no `__part=N` directory, and a data dir without a
+    // parquet file has no schema to read back: one schema-only file (the
+    // writer's single empty partition for a partitionless input) stands in
+    if (partCounts.isEmpty)
+      df.sparkSession.createDataFrame(df.sparkSession.sparkContext.emptyRDD[Row], df.schema)
+        .write.mode("overwrite").parquet(dd.toString)
     val rows = partCounts.map(_._2).sum
     val snap = Snapshot(v, stage, rows, parents, partCounts.map(_._2).toSeq)
     writeManifest(tableDir, snap)

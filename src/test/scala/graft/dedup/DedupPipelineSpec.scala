@@ -43,12 +43,14 @@ class DedupPipelineSpec extends AnyFunSuite with SparkTest {
 
   private lazy val defaultAssign: Map[String, Long] = clusterOf(DedupPipeline.run(clips, cfg))
 
-  private lazy val pipelineClusters: Array[Int] = {
-    // relabel clusters as int group ids for comparison
-    val labels = Array.tabulate(n)(i => defaultAssign(CorpusGen.clipId(i.toLong)))
+  /** Clusters relabelled as int group ids in clip order, for comparison. */
+  private def groups(assign: Map[String, Long]): Array[Int] = {
+    val labels = Array.tabulate(n)(i => assign(CorpusGen.clipId(i.toLong)))
     val remap = labels.distinct.zipWithIndex.toMap
     labels.map(remap)
   }
+
+  private lazy val pipelineClusters: Array[Int] = groups(defaultAssign)
 
   /** `body`'s result and the executed plans of its queries that verify
     * Jaccard pairs (graft_jaccard_ge). */
@@ -76,6 +78,16 @@ class DedupPipelineSpec extends AnyFunSuite with SparkTest {
   test("dup-pair recall >= 0.99 vs brute-force reference clustering") {
     val recall = BruteForceOracle.pairRecall(oracleClusters, pipelineClusters)
     info(s"dup-pair recall = $recall")
+    assert(recall >= 0.99, s"recall $recall < 0.99")
+  }
+
+  test("sketchHotKeys with a small bucket cap keeps dup-pair recall >= 0.99") {
+    // maxBucketSize = 8: the Misra-Gries hot-key path (pairsPackedSketch)
+    // salts the buckets of every planted cluster above 8 members, the
+    // giant one of 30+ included
+    val sketch = clusterOf(DedupPipeline.run(clips, cfg.copy(sketchHotKeys = true, maxBucketSize = 8)))
+    val recall = BruteForceOracle.pairRecall(oracleClusters, groups(sketch))
+    info(s"sketchHotKeys dup-pair recall = $recall")
     assert(recall >= 0.99, s"recall $recall < 0.99")
   }
 

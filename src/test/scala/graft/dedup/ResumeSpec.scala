@@ -81,6 +81,28 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     assert(metrics.contains("\"stage\":\"assignments\""))
   }
 
+  test("a corpus without near-duplicates converges on the empty graph and resumes as a pure read") {
+    import spark.implicits._
+    // unrelated random-word transcripts: no pair passes any clause
+    val rnd = new scala.util.Random(7L)
+    val distinct = (0 until 6).map { i =>
+      (s"solo-$i", Seq.fill(40)(rnd.alphanumeric.take(7).mkString).mkString(" "))
+    }.toDF("clip_id", "transcript")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val dir = tmpDir("empty")
+    val clusters = CheckpointedDedup.run(distinct, dir, cfg).get
+      .select("clip_id", "cluster").as[(String, Long)].collect()
+    assert(clusters.length == 6)
+    assert(clusters.map(_._2).distinct.length == 6, "every clip is its own cluster")
+    assert(SnapshotLog.manifest(s"$dir/edges").exists(_.rows == 0L))
+    assert(SnapshotLog.latestStage(s"$dir/labels").exists(_.stage == "labels_converged"))
+    assert(sc.getPersistentRDDs.keySet == before, "run left persisted RDDs")
+    val v1 = SnapshotLog.latestVersion(s"$dir/assignments")
+    assert(CheckpointedDedup.run(distinct, dir, cfg).get.count() == 6)
+    assert(SnapshotLog.latestVersion(s"$dir/assignments") == v1, "resume must not re-commit")
+  }
+
   test("second run over a completed workDir is a pure read (no recompute)") {
     val dir = tmpDir("idem")
     assignmentsOf(dir)
