@@ -376,11 +376,7 @@ object Bench {
     val warmClips = clips.where(pmod(xxhash64(col("clip_id")), lit(4L)) === lit(0L))
     def once(input: org.apache.spark.sql.DataFrame): (Double, Long) = {
       val t0 = System.nanoTime()
-      // experiment knobs (default = the frozen config; overriding changes
-      // the candidate set and thus the checksum — A/B only, not the gate)
-      val cfg = DedupConfig.default.copy(
-        maxBucketSize = prop("graft.cap", DedupConfig.default.maxBucketSize.toString).toInt)
-      val checksum = assignmentChecksum(DedupPipeline.run(input, cfg))
+      val checksum = assignmentChecksum(DedupPipeline.run(input, DedupConfig.default))
       val dt = (System.nanoTime() - t0) / 1e9
       // the pipeline self-cleans its internal caches (DedupPipeline.run);
       // what remains pinned is the RETURNED table's eager checkpoint —

@@ -50,7 +50,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // no-silent-caps evidence (ADVICE r4): bucket runs that exceeded
-    // runBufferCap degrade to the windowed drain and forfeit candidate-
+    // cap × MaxSalts ids degrade to the windowed drain and forfeit candidate-
     // recall completeness — the count must be 0 for the "lane equals
     // oracle" claims above to be airtight, and is dumped so the claim is
     // machine-checkable per verify run.
@@ -58,7 +58,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/pair_gen_overflow_runs.json"),
       s"""{"overflow_runs":$ov}""")
     if (ov > 0) System.err.println(s"[verify] WARNING: $ov bucket runs overflowed " +
-      "runBufferCap — windowed-drain degrade fired; candidate recall not complete")
+      "cap*MaxSalts ids — windowed-drain degrade fired; candidate recall not complete")
     spark.stop()
   }
 }

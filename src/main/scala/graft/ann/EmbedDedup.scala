@@ -41,8 +41,6 @@ object EmbedDedup {
   def clusters(vectors: DataFrame, threshold: Double = 0.45,
                planesPerTable: Int = 4, tables: Int = 32, seed: Long = 42L,
                cfg: DedupConfig = DedupConfig.default): DataFrame = RunScope(vectors) { (_, _) =>
-    val spark = vectors.sparkSession
-    import spark.implicits._
     val sigCols = (0 until tables).map(t =>
       hyperplane_sig(col("embedding"), planesPerTable, seed + t))
     val sigs = vectors.select(col("vec_id"),
@@ -50,11 +48,12 @@ object EmbedDedup {
     // one packed 64-bit bucket key per (table, sig): tables stay disjoint up
     // to a 64-bit coincidence, and a coincidence can only ADD candidates —
     // every pair is exactly verified below (same argument as the text
-    // lanes' lane-salted keyspace, DedupPipeline.candidates)
+    // lanes' lane-salted keyspace, DedupPipeline.candidates). Lane index 0
+    // (lane bit 1) in the key's low 2 bits.
     val buckets = sigs.select(
-      murmur3_pair(col("bucket"), col("table").cast("long")).as("key"),
-      col("vec_id").as("id"), lit(1).as("lane")).as[CandidatePairs.Bucket]
-    val cand = CandidatePairs.pairs(buckets, cfg)
+      shiftleft(murmur3_pair(col("bucket"), col("table").cast("long")), 2).as("bkey"),
+      col("vec_id").as("id"))
+    val cand = CandidatePairs.pairsPacked(buckets, cfg)
 
     val embA = vectors.select(col("vec_id").as("a"), col("embedding").as("a_emb"))
     val embB = vectors.select(col("vec_id").as("b"), col("embedding").as("b_emb"))

@@ -35,13 +35,6 @@ final case class DedupConfig(
     seed: Long = 42L,
     /** cap on LSH bucket size before salted overflow handling (skew guard) */
     maxBucketSize: Int = 64,
-    /** max bucket-run ids buffered in the single-exchange pair generation
-      * before switching to the bounded-memory streaming expansion
-      * ([[graft.dedup.CandidatePairs]]). At the default cap*MaxSalts the
-      * streaming path's pinned salts=MaxSalts equals the exact saltCount
-      * (it saturates), so the emitted pairs stay a pure function of the
-      * data at ANY run length. */
-    runBufferCap: Int = 65536,
     /** pin the verification lookup tables (slim signatures + norm texts)
       * as the broadcast build side. Right whenever one executor can hold
       * the corpus' norm table (bench scale, and clusters up to ~10^8
@@ -55,7 +48,8 @@ final case class DedupConfig(
       * ≈ low-GB broadcast relations; tune per deployment. */
     broadcastLookupMaxRows: Long = 5000000L,
     /** hot-bucket detection: exact per-key counts (default — deterministic
-      * under any partitioning, map-side-combined shuffle of distinct keys)
+      * under any partitioning, each bucket run counted inside the single
+      * run-streaming exchange of [[graft.dedup.CandidatePairs]])
       * vs the Misra-Gries sketch (O(k) driver bytes, the 10^12-row path,
       * but partition-dependent near the threshold). */
     sketchHotKeys: Boolean = false,

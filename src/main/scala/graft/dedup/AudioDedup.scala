@@ -83,7 +83,7 @@ object AudioDedup {
     * real mate pairs (observed at n=500: a ham=1 pair whose only exact
     * blocks were the three over-cap zero blocks); the recursive split keeps
     * candidate recall COMPLETE for the Hamming budget at any bucket size
-    * below runBufferCap, so the lane still equals the O(n^2) oracle
+    * below cap × MaxSalts ids, so the lane still equals the O(n^2) oracle
     * exactly. */
   def verifiedEdges(feats: DataFrame, cfg: DedupConfig): DataFrame = {
     val buckets = feats.select(

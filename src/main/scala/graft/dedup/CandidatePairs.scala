@@ -7,18 +7,22 @@ import org.apache.spark.sql.functions._
 
 /** Bucket → candidate-pair expansion with explicit skew handling.
   *
-  * Input: rows of (key: Long, id: Long) — an LSH band bucket, a SimHash
-  * block bucket, or a winnowing-fingerprint bucket. Output: unordered
-  * candidate pairs (a, b), a < b.
+  * Input: rows of (bkey: Long, id: Long) — an LSH band bucket, a SimHash
+  * block bucket, a winnowing-fingerprint bucket or an embedding-LSH
+  * bucket, lane index in the key's low 2 bits. Output: unordered candidate
+  * pairs (a, b), a < b.
   *
-  * Skew machinery (SURVEY.md §2.2 P7): hot bucket keys are detected with the
-  * Misra-Gries FreqSketch — the reference's `getFrequentKeys` heavy-hitter
-  * query (`FrequencyEstimator.java:75`, `FrequentItems.java:311-332`) run as
-  * a partial-aggregate (one tiny sketch per partition, merged on the driver,
-  * `FrequentItems.java:292-308` merge law) so hot-key detection costs O(k)
-  * driver bytes instead of a full per-key count shuffle. Hot keys are salted
-  * into ceil(size/cap) sub-buckets; within each (key, salt) group pairs are
-  * emitted all-pairs when small, sliding-window when large (bounding both
+  * Skew machinery (SURVEY.md §2.2 P7): by default every bucket is counted
+  * exactly inside the one repartition-and-sort exchange that streams its
+  * run ([[streamRuns]]). `sketchHotKeys` instead detects hot keys with the
+  * Misra-Gries FreqSketch ([[pairsPackedSketch]]) — the reference's
+  * `getFrequentKeys` heavy-hitter query (`FrequencyEstimator.java:75`,
+  * `FrequentItems.java:311-332`) run as a partial-aggregate (one tiny
+  * sketch per partition, merged on the driver, `FrequentItems.java:292-308`
+  * merge law) so hot-key detection costs O(k) driver bytes instead of
+  * per-key count state. Hot keys are salted into ceil(size/cap)
+  * sub-buckets; within each (key, salt) group pairs are emitted
+  * all-pairs when small, sliding-window when large (bounding both
   * per-bucket pair count AND per-vertex degree — which is what keeps the
   * later CC joins hub-free); sub-buckets of a hot key are stitched with a
   * chain over their min ids so true giant clusters stay connected.
@@ -30,14 +34,15 @@ object CandidatePairs {
   /** Salt-group count bounds for hot keys. */
   final val MaxSalts = 1024
 
-  /** Overflow-degrade visibility (ADVICE r4): past `runBufferCap` a bucket
-    * run drains through the bounded-memory windowed path and the advertised
-    * "candidate recall COMPLETE below runBufferCap" property stops holding
-    * for that run — the repo's no-silent-caps discipline requires that loss
-    * to be machine-visible, not oral history. One named accumulator per
-    * SparkContext counts overflowed runs across all pair-gen jobs; Bench and
-    * Verify surface the value in their artifacts (expected 0 at every tested
-    * scale — a single bucket needs ~10^5 members to trip it). */
+  /** Overflow-degrade visibility (ADVICE r4): past cap × MaxSalts ids a
+    * bucket run drains through the bounded-memory windowed path and the
+    * advertised "candidate recall COMPLETE below cap × MaxSalts" property
+    * stops holding for that run — the repo's no-silent-caps discipline
+    * requires that loss to be machine-visible, not oral history. One named
+    * accumulator per SparkContext counts overflowed runs across all
+    * pair-gen jobs; Bench and Verify surface the value in their artifacts
+    * (expected 0 at every tested scale — a single bucket needs ~10^5
+    * members to trip it). */
   private val overflowAccs =
     new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext,
       org.apache.spark.util.LongAccumulator]
@@ -45,8 +50,6 @@ object CandidatePairs {
     overflowAccs.computeIfAbsent(sc, c => c.longAccumulator("graft.pairs.overflowRuns"))
   /** Total overflowed runs observed on the session's context so far. */
   def overflowRuns(spark: SparkSession): Long = overflowAcc(spark.sparkContext).value
-
-  final case class Bucket(key: Long, id: Long, lane: Int)
 
   /** Stitch the salt groups of one split hot bucket: every group minimum
     * pairs with the smallest minimum (a STAR, not a path). Same candidate
@@ -66,13 +69,14 @@ object CandidatePairs {
     reps.iterator.filter(_ != m).map(r => (math.min(m, r), math.max(m, r), lane))
   }
 
-  /** Salted fallback for an over-cap run shared by the packed and keyed
+  /** Salted fallback for an over-cap run shared by the packed and Hamming
     * paths: pmod-salted groups, window-capped expansion per group, star
-    * stitch over the salt-ordered group minima. Extracted verbatim from the
-    * packed path (the emitted pair set is a pure function of (bkey, arr, n,
-    * cap) — unchanged by the move). */
-  private def saltedRun(bkey: Long, lane: Int, arr: Array[Long], n: Int,
+    * stitch over the salt-ordered group minima. The emitted pair set is a
+    * pure function of (bkey, arr, cap); `arr` holds the run's ids
+    * ascending. */
+  private def saltedRun(bkey: Long, lane: Int, arr: Array[Long],
                         cap: Int): Iterator[(Long, Long, Int)] = {
+    val n = arr.length
     val salts = math.max(2L, math.min(MaxSalts.toLong, n.toLong / cap + 1L)).toInt
     val groups = Array.fill(salts)(new scala.collection.mutable.ArrayBuilder.ofLong)
     var i = 0
@@ -110,15 +114,21 @@ object CandidatePairs {
     }
   }
 
-  /** Full skew-aware pair generation. Output (a, b, lane): unordered unique
-    * pairs with the OR of the lane bits that produced them — verification
-    * then evaluates only the predicate clause(s) whose lane emitted a pair
-    * (a jaccard check is pointless for a pair only the SimHash-block lane
-    * produced, and vice versa).
+  /** Full skew-aware pair generation over a packed (bkey, id) bucket
+    * table — the entry [[DedupPipeline.candidates]] (one pass over the
+    * features cache) and [[graft.ann.EmbedDedup]] emit their rows into.
+    * Output (a, b, lane): unordered unique pairs with the OR of the lane
+    * bits that produced them — verification then evaluates only the
+    * predicate clause(s) whose lane emitted a pair (a jaccard check is
+    * pointless for a pair only the SimHash-block lane produced, and vice
+    * versa).
     *
     * Data-motion layout:
     *  - bucket rows travel as packed (bkey, id) 2-long rows — lane index
-    *    in the low 2 bits of the 64-bit key;
+    *    in the low 2 bits of the 64-bit key (keyspaces are already
+    *    lane-disjoint via the per-lane xor salt; the 2 bits lost to the
+    *    shift are hash bits — a cross-bucket collision merges two buckets,
+    *    which can only ADD candidates, all exactly verified downstream);
     *  - the exact path ([[pairsPackedExact]]) moves them through ONE
     *    repartition-and-sort exchange and streams complete bucket runs per
     *    partition — counts, singleton drop, salting, expansion and chain
@@ -127,35 +137,12 @@ object CandidatePairs {
     *    ([[pairsPackedSketch]]): Misra-Gries hot-key detection in O(k)
     *    driver bytes + salts-only broadcast, for corpora where even exact
     *    per-key counting is too much state. */
-  def pairs(buckets: Dataset[Bucket], cfg: DedupConfig = DedupConfig.default): DataFrame = {
-    import buckets.sparkSession.implicits._
-    // lane bit -> 2-bit index packed into the key's low bits (keyspaces are
-    // already lane-disjoint via the per-lane xor salt; the 2 bits lost to
-    // the shift are hash bits — a cross-bucket collision merges two buckets,
-    // which can only ADD candidates, all exactly verified downstream)
-    val laneIdx = when($"lane" === lit(1), lit(0L))
-      .when($"lane" === lit(2), lit(1L)).otherwise(lit(2L))
-    pairsPacked(buckets.toDF()
-      .select(shiftleft($"key", 2).bitwiseOR(laneIdx).as("bkey"), $"id"), cfg)
-  }
-
-  /** [[pairs]] over an already-packed (bkey, id) bucket table — the
-    * production entry ([[DedupPipeline.candidates]] emits packed rows in
-    * its single pass over the features cache). */
   def pairsPacked(packedIn: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame =
     if (cfg.sketchHotKeys) pairsPackedSketch(packedIn, cfg)
     else pairsPackedExact(packedIn, cfg)
 
-  /** Exact path: ONE exchange for the whole pair generation.
+  /** Exact path: [[streamRuns]] with the packed run expander.
     *
-    * `repartition(bkey) + sortWithinPartitions(bkey, id)` makes every
-    * bucket a contiguous sorted run inside exactly one partition; a single
-    * streaming pass over each partition then handles everything the old
-    * three-exchange flow (per-key count shuffle, salt-delivery broadcast
-    * join, salted data exchange, chain-stitch aggregation) did, with zero
-    * further data motion and no driver round-trip:
-    *
-    *  - singleton runs emit nothing (the old count>=2 semi-join for free);
     *  - runs of 2..cap-1 ids emit all-pairs;
     *  - runs of >= cap ids are salted into ceil(n/cap) (clamped [2,
     *    MaxSalts]) groups by pmod(murmur(id, bkey), salts) — the same pure
@@ -163,110 +150,159 @@ object CandidatePairs {
     *    fps_hits co-emission counts the containment gate reads) is
     *    byte-identical to the old flow and independent of partitioning —
     *    each group expanded all-pairs/windowed, plus the chain pairs over
-    *    the salt-ordered group minima that keep a split bucket connected;
-    *  - runs longer than RunBuffer ids (~10^9-member buckets; cannot exist
-    *    below cap*MaxSalts rows) switch to a bounded-memory streaming mode:
-    *    salts saturates at MaxSalts (which is exact for any run this long),
-    *    per-salt sliding windows of the ascending id stream emit the same
-    *    windowed pairs, per-salt minima accumulate for the chains — O(
-    *    MaxSalts * Window) memory however large the bucket.
-    *
-    * The sort is the shuffle's own ordering work (2-long rows); at 10^12
-    * rows this is strictly less motion than the old flow shuffled for the
-    * count alone. */
+    *    the salt-ordered group minima that keep a split bucket connected. */
   private[dedup] def pairsPackedExact(packedIn: DataFrame, cfg: DedupConfig): DataFrame = {
+    val cap = cfg.maxBucketSize
+    streamRuns(packedIn, cfg, withFp = false) { (bkey, lane, ids, _) =>
+      if (ids.length < cap) expand(ids, cap).map { case (a, b) => (a, b, lane) }
+      else saltedRun(bkey, lane, ids, cap)
+    }
+  }
+
+  /** Expands one complete bucket run: (bkey, lane, ids ascending, their
+    * fingerprints or null) → (a, b, lane) pairs. */
+  private type RunExpander = (Long, Int, Array[Long], Array[Long]) => Iterator[(Long, Long, Int)]
+
+  /** Field access for the two exchange row shapes: (bkey, id) on the
+    * packed path, (bkey, id, fp) on the Hamming path. */
+  private sealed abstract class RunRows[R] extends Serializable {
+    def key(r: R): Long
+    def id(r: R): Long
+    def fp(r: R): Long
+  }
+  private object IdRows extends RunRows[(Long, Long)] {
+    def key(r: (Long, Long)): Long = r._1
+    def id(r: (Long, Long)): Long = r._2
+    def fp(r: (Long, Long)): Long = 0L
+  }
+  private object FpRows extends RunRows[(Long, Long, Long)] {
+    def key(r: (Long, Long, Long)): Long = r._1
+    def id(r: (Long, Long, Long)): Long = r._2
+    def fp(r: (Long, Long, Long)): Long = r._3
+  }
+
+  /** The bucket-run streamer under both exact entries: ONE exchange for
+    * the whole pair generation.
+    *
+    * `repartition(bkey) + sortWithinPartitions(bkey, id)` makes every
+    * bucket a contiguous sorted run inside exactly one partition; a single
+    * streaming pass over each partition then handles everything the old
+    * three-exchange flow (per-key count shuffle, salt-delivery broadcast
+    * join, salted data exchange, chain-stitch aggregation) did, with zero
+    * further data motion and no driver round-trip. Each run is read into
+    * arrays of at most runBuffer = cap * MaxSalts ids (with `withFp`, also
+    * their fingerprints); singleton runs emit nothing (the old count>=2
+    * semi-join for free) and every other complete run goes to `expandRun`.
+    *
+    * A run longer than runBuffer (65,536 ids at the default cap) drains
+    * through [[overflowRun]] instead, counted on [[overflowAcc]]. The drain
+    * pins salts at MaxSalts, and that is exact (ADVICE r2): runBuffer is
+    * cap * MaxSalts whatever the cap, so every overflowing run has more
+    * than cap * MaxSalts ids and its salt count has saturated.
+    *
+    * The packed exchange carries only (bkey, id); fingerprints travel only
+    * with `withFp`. The sort is the shuffle's own ordering work (2-long
+    * rows on the packed path); at 10^12 rows this is strictly less motion
+    * than the old flow shuffled for the count alone. */
+  private def streamRuns(packedIn: DataFrame, cfg: DedupConfig, withFp: Boolean)(
+      expandRun: RunExpander): DataFrame = {
     val spark = packedIn.sparkSession
     import spark.implicits._
-    val cap = cfg.maxBucketSize
-    // clamp (ADVICE r2): the overflow path pins salts = MaxSalts, which is
-    // exact only when every overflow run has >= cap*MaxSalts members — so
-    // the buffer must hold at least that many regardless of how callers
-    // tune cap (Bench's graft.cap knob) or runBufferCap. At the default
-    // config cap*MaxSalts == runBufferCap == 65536: behavior (and the gate
-    // checksum) unchanged.
-    val runBuffer = math.min(Int.MaxValue.toLong,
-      math.max(cap.toLong * MaxSalts, cfg.runBufferCap.toLong)).toInt
-
+    val runBuffer = math.min(Int.MaxValue.toLong, cfg.maxBucketSize.toLong * MaxSalts).toInt
     val ovAcc = overflowAcc(spark.sparkContext)
-    val parts = packedIn
+    val sorted = packedIn
       .repartition(col("bkey"))
       .sortWithinPartitions(col("bkey"), col("id"))
-      .select(col("bkey"), col("id")).as[(Long, Long)]
 
-    val emitted = parts.mapPartitions { it0 =>
-      val it = it0.buffered
+    def stream[R](rows: Dataset[R], shape: RunRows[R]): Dataset[(Long, Long, Int)] =
+      rows.mapPartitions { it0 =>
+        val it = it0.buffered
+        def inRun(bkey: Long): Boolean = it.hasNext && shape.key(it.head) == bkey
 
-      // one run = all rows of one bkey (contiguous, ids ascending)
-      def processRun(): Iterator[(Long, Long, Int)] = {
-        val bkey = it.head._1
-        val lane = 1 << (bkey & 3L).toInt
-        var arr = new Array[Long](16)
-        var n = 0
-        while (it.hasNext && it.head._1 == bkey && n < runBuffer) {
-          if (n == arr.length) arr = java.util.Arrays.copyOf(arr, arr.length << 1)
-          arr(n) = it.next()._2
-          n += 1
-        }
-        if (it.hasNext && it.head._1 == bkey) overflowRun(bkey, lane, arr, n)
-        else if (n < 2) Iterator.empty
-        else if (n < cap) expand(java.util.Arrays.copyOf(arr, n), cap)
-          .map { case (a, b) => (a, b, lane) }
-        else saltedRun(bkey, lane, arr, n, cap)
-      }
-
-      /** count > RunBuffer: bounded-memory streaming variant. salts is
-        * pinned at MaxSalts — exact because runBuffer >= cap*MaxSalts (the
-        * clamp above), so any overflowing run has saturated saltCount.
-        * Groups always window-expand: expected group size is runBuffer /
-        * MaxSalts >= cap. Residual approximation (ADVICE r2): a salt group
-        * that lands *at or below* cap members would have gotten all-pairs
-        * expansion in saltedRun but gets the window here; with window >=
-        * cap/4 the chains keep recall (the skewed-fixture recall gate
-        * covers the regime), and any TRUE giant bucket's groups are far
-        * above cap anyway. */
-      def overflowRun(bkey: Long, lane: Int, prefix: Array[Long], pn: Int): Iterator[(Long, Long, Int)] = {
-        ovAcc.add(1L)
-        val salts = MaxSalts
-        val win = Window - 1
-        val rings = Array.ofDim[Long](salts, win)
-        val counts = new Array[Long](salts)
-        val mins = new Array[Long](salts)
-        val seen = new Array[Boolean](salts)
-        val rest = new Iterator[Long] {
-          def hasNext: Boolean = it.hasNext && it.head._1 == bkey
-          def next(): Long = it.next()._2
-        }
-        val src = prefix.iterator.take(pn) ++ rest
-        val windowed = src.flatMap { id =>
-          val h = graft.core.Murmur3.hashLong(id, bkey)
-          val s = (((h % salts) + salts) % salts).toInt
-          if (!seen(s)) { seen(s) = true; mins(s) = id }
-          val c = counts(s)
-          val have = math.min(c, win.toLong).toInt
-          val ring = rings(s)
-          val out = Iterator.range(0, have).map { d =>
-            val prev = ring(((c - 1 - d) % win).toInt)
-            (math.min(prev, id), math.max(prev, id), lane)
+        // one run = all rows of one bkey (contiguous, ids ascending)
+        def run(): Iterator[(Long, Long, Int)] = {
+          val bkey = shape.key(it.head)
+          val lane = 1 << (bkey & 3L).toInt
+          var ids = new Array[Long](16)
+          var fps = if (withFp) new Array[Long](16) else null
+          var n = 0
+          while (n < runBuffer && inRun(bkey)) {
+            if (n == ids.length) {
+              ids = java.util.Arrays.copyOf(ids, n << 1)
+              if (withFp) fps = java.util.Arrays.copyOf(fps, n << 1)
+            }
+            val r = it.next()
+            ids(n) = shape.id(r)
+            if (withFp) fps(n) = shape.fp(r)
+            n += 1
           }
-          ring((c % win).toInt) = id
-          counts(s) = c + 1
-          out
+          if (inRun(bkey)) {
+            ovAcc.add(1L)
+            val rest = new Iterator[Long] {
+              def hasNext: Boolean = inRun(bkey)
+              def next(): Long = shape.id(it.next())
+            }
+            overflowRun(bkey, lane, ids.iterator.take(n) ++ rest)
+          } else if (n < 2) Iterator.empty
+          else expandRun(bkey, lane, java.util.Arrays.copyOf(ids, n),
+            if (withFp) java.util.Arrays.copyOf(fps, n) else null)
         }
-        // chains built lazily AFTER the stream drains (++ is by-name)
-        def chains: Iterator[(Long, Long, Int)] = {
-          val reps = Iterator.range(0, salts).filter(seen(_)).map(mins(_)).toArray
-          starChain(reps, lane)
-        }
-        windowed ++ chains
+
+        new Iterator[Iterator[(Long, Long, Int)]] {
+          def hasNext: Boolean = it.hasNext
+          def next(): Iterator[(Long, Long, Int)] = run()
+        }.flatten
       }
 
-      new Iterator[Iterator[(Long, Long, Int)]] {
-        def hasNext: Boolean = it.hasNext
-        def next(): Iterator[(Long, Long, Int)] = processRun()
-      }.flatten
-    }.toDF("a", "b", "lane")
+    val emitted =
+      if (withFp) stream(sorted.select(col("bkey"), col("id"), col("fp")).as[(Long, Long, Long)], FpRows)
+      else stream(sorted.select(col("bkey"), col("id")).as[(Long, Long)], IdRows)
+    aggregatePairs(emitted.toDF("a", "b", "lane"))
+  }
 
-    aggregatePairs(emitted)
+  /** Bounded-memory drain of one run longer than the run buffer, for both
+    * entries: salts is pinned at MaxSalts (exact, see [[streamRuns]]),
+    * per-salt sliding windows of the ascending id stream emit the same
+    * windowed pairs, per-salt minima accumulate for the chains — O(
+    * MaxSalts * Window) memory however large the bucket.
+    *
+    * Groups always window-expand: expected group size is runBuffer /
+    * MaxSalts >= cap. Residual approximation (ADVICE r2): a salt group
+    * that lands *at or below* cap members would have gotten all-pairs
+    * expansion in saltedRun but gets the window here; with window >=
+    * cap/4 the chains keep recall (the skewed-fixture recall gate covers
+    * the regime), and any TRUE giant bucket's groups are far above cap
+    * anyway. On the Hamming path the drain reads ids only and forfeits
+    * Hamming-recall completeness for THIS run — which is why every drain
+    * is counted on the overflow accumulator (ADVICE r4), never silent. */
+  private def overflowRun(bkey: Long, lane: Int, src: Iterator[Long]): Iterator[(Long, Long, Int)] = {
+    val salts = MaxSalts
+    val win = Window - 1
+    val rings = Array.ofDim[Long](salts, win)
+    val counts = new Array[Long](salts)
+    val mins = new Array[Long](salts)
+    val seen = new Array[Boolean](salts)
+    val windowed = src.flatMap { id =>
+      val h = graft.core.Murmur3.hashLong(id, bkey)
+      val s = (((h % salts) + salts) % salts).toInt
+      if (!seen(s)) { seen(s) = true; mins(s) = id }
+      val c = counts(s)
+      val have = math.min(c, win.toLong).toInt
+      val ring = rings(s)
+      val out = Iterator.range(0, have).map { d =>
+        val prev = ring(((c - 1 - d) % win).toInt)
+        (math.min(prev, id), math.max(prev, id), lane)
+      }
+      ring((c % win).toInt) = id
+      counts(s) = c + 1
+      out
+    }
+    // chains built lazily AFTER the stream drains (++ is by-name)
+    def chains: Iterator[(Long, Long, Int)] = {
+      val reps = Iterator.range(0, salts).filter(seen(_)).map(mins(_)).toArray
+      starChain(reps, lane)
+    }
+    windowed ++ chains
   }
 
   /** Depth guard for [[expandHamming]]: beyond this the group degrades to
@@ -343,7 +379,7 @@ object CandidatePairs {
         i = 0
         while (i < n) { arr(i) = ids(idx(i)); i += 1 }
         java.util.Arrays.sort(arr)
-        saltedRun(bkey, lane, arr, n, cap)
+        saltedRun(bkey, lane, arr, cap)
       } else {
         splitMask(m, maxHam + 1).iterator.filter(_ != 0L).flatMap { sm =>
           val groups = scala.collection.mutable.LongMap
@@ -363,106 +399,39 @@ object CandidatePairs {
   }
 
   /** Exact Hamming-join pair generation over (bkey, id, fp) bucket rows —
-    * the keyed sibling of [[pairsPackedExact]] for predicates of the form
+    * the sibling of [[pairsPackedExact]] for predicates of the form
     * "Hamming(fp_a, fp_b) <= maxHam AND <secondary check>". Same
-    * single-exchange layout (repartition + sortWithinPartitions, 3-long
-    * rows, complete runs streamed per partition); over-cap runs recurse via
-    * [[expandHamming]] instead of windowing, so candidate recall for the
-    * Hamming budget is COMPLETE at any bucket size below `runBufferCap`
-    * (beyond it the same bounded-memory windowed drain as the packed path
-    * applies — a ~10^5-member single bucket, the documented boundary).
+    * [[streamRuns]] exchange (3-long rows); every run of >= 2 ids goes to
+    * [[expandHamming]], which expands all-pairs up to and including cap
+    * ids and recurses instead of windowing above it, so candidate recall
+    * for the Hamming budget is COMPLETE at any bucket size below
+    * cap * MaxSalts (beyond it the same bounded-memory windowed drain as
+    * the packed path applies — a ~10^5-member single bucket, the
+    * documented boundary).
     *
     * `pinnedMask(bkey)` must return the fingerprint bits the level-0 bucket
     * key already pins (the pigeonhole block the row was emitted for). */
   def pairsHamming(packedIn: DataFrame, cfg: DedupConfig, maxHam: Int,
                    fullMask: Long, pinnedMask: Long => Long): DataFrame = {
-    val spark = packedIn.sparkSession
-    import spark.implicits._
     val cap = cfg.maxBucketSize
-    val runBuffer = math.min(Int.MaxValue.toLong,
-      math.max(cap.toLong * MaxSalts, cfg.runBufferCap.toLong)).toInt
-
-    val ovAcc = overflowAcc(spark.sparkContext)
-    val parts = packedIn
-      .repartition(col("bkey"))
-      .sortWithinPartitions(col("bkey"), col("id"))
-      .select(col("bkey"), col("id"), col("fp")).as[(Long, Long, Long)]
-
-    val emitted = parts.mapPartitions { it0 =>
-      val it = it0.buffered
-
-      def processRun(): Iterator[(Long, Long, Int)] = {
-        val bkey = it.head._1
-        val lane = 1 << (bkey & 3L).toInt
-        var ids = new Array[Long](16)
-        var fs = new Array[Long](16)
-        var n = 0
-        while (it.hasNext && it.head._1 == bkey && n < runBuffer) {
-          if (n == ids.length) {
-            ids = java.util.Arrays.copyOf(ids, ids.length << 1)
-            fs = java.util.Arrays.copyOf(fs, fs.length << 1)
-          }
-          val r = it.next()
-          ids(n) = r._2
-          fs(n) = r._3
-          n += 1
-        }
-        if (it.hasNext && it.head._1 == bkey) {
-          // beyond runBuffer: bounded-memory windowed drain (ids only),
-          // mirroring the packed path's overflowRun boundary. The drain
-          // forfeits Hamming-recall completeness for THIS run — counted on
-          // the overflow accumulator so the degrade is machine-visible
-          // (ADVICE r4), never silent.
-          ovAcc.add(1L)
-          val salts = MaxSalts
-          val win = Window - 1
-          val rings = Array.ofDim[Long](salts, win)
-          val counts = new Array[Long](salts)
-          val mins = new Array[Long](salts)
-          val seen = new Array[Boolean](salts)
-          val rest = new Iterator[Long] {
-            def hasNext: Boolean = it.hasNext && it.head._1 == bkey
-            def next(): Long = it.next()._2
-          }
-          val src = ids.iterator.take(n) ++ rest
-          val windowed = src.flatMap { id =>
-            val h = graft.core.Murmur3.hashLong(id, bkey)
-            val s = (((h % salts) + salts) % salts).toInt
-            if (!seen(s)) { seen(s) = true; mins(s) = id }
-            val c = counts(s)
-            val have = math.min(c, win.toLong).toInt
-            val ring = rings(s)
-            val out = Iterator.range(0, have).map { d =>
-              val prev = ring(((c - 1 - d) % win).toInt)
-              (math.min(prev, id), math.max(prev, id), lane)
-            }
-            ring((c % win).toInt) = id
-            counts(s) = c + 1
-            out
-          }
-          def chains: Iterator[(Long, Long, Int)] = {
-            val reps = Iterator.range(0, salts).filter(seen(_)).map(mins(_)).toArray
-            starChain(reps, lane)
-          }
-          windowed ++ chains
-        } else if (n < 2) Iterator.empty
-        else expandHamming(java.util.Arrays.copyOf(ids, n),
-          java.util.Arrays.copyOf(fs, n), Array.tabulate(n)(identity),
-          fullMask & ~pinnedMask(bkey), cap, maxHam, lane, bkey, 0)
-      }
-
-      new Iterator[Iterator[(Long, Long, Int)]] {
-        def hasNext: Boolean = it.hasNext
-        def next(): Iterator[(Long, Long, Int)] = processRun()
-      }.flatten
-    }.toDF("a", "b", "lane")
-
-    aggregatePairs(emitted)
+    streamRuns(packedIn, cfg, withFp = true) { (bkey, lane, ids, fps) =>
+      expandHamming(ids, fps, Array.tabulate(ids.length)(identity),
+        fullMask & ~pinnedMask(bkey), cap, maxHam, lane, bkey, 0)
+    }
   }
 
   /** Sketch path (the documented 10^12-row extreme: even the count>=2 key
     * set outgrows a broadcast): Misra-Gries hot keys, O(k) driver bytes,
-    * salts-only broadcast, no singleton drop. */
+    * salts-only broadcast, no singleton drop.
+    *
+    * Unlike the exact paths, the pair set here is NOT independent of the
+    * shuffle width. A key's salt count comes from its Misra-Gries upper
+    * bound, and that bound depends on how the stream was split into
+    * partitions and in which order the partial sketches merge: a key near
+    * the cap can be hot (salted) at one width and cold (one group) at
+    * another, and a hot key's `ub`, and with it `salts` and the groups,
+    * can differ. Recall is gated instead (DedupPipelineSpec's
+    * sketchHotKeys test). */
   private[dedup] def pairsPackedSketch(packedIn: DataFrame, cfg: DedupConfig): DataFrame = {
     val spark = packedIn.sparkSession
     import spark.implicits._

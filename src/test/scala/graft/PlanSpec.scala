@@ -4,14 +4,13 @@ import graft.corpus.CorpusGen
 import graft.dedup.{DedupPipeline, RunScope}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Physical-plan shape assertions — the 100 TB guarantees the code relies
   * on must be visible in `explain`, not assumed. */
 class PlanSpec extends AnyFunSuite with SparkTest {
 
   private lazy val corpusPath = {
-    val dir = Files.createTempDirectory("graft-plan").toString + "/clips"
+    val dir = tempDir("graft-plan") + "/clips"
     CorpusGen.clips(spark, 200).write.mode("overwrite").parquet(dir)
     dir
   }
@@ -125,6 +124,21 @@ class PlanSpec extends AnyFunSuite with SparkTest {
       s"audio lane plans a nested-loop join:\n$edgePlan")
     assert(!edgePlan.contains("CartesianProduct"),
       s"audio lane plans a cartesian product:\n$edgePlan")
+  }
+
+  test("text lane pair-gen exchange carries only bkey and id") {
+    // the bucket rows are the pipeline's widest shuffle: the run-streaming
+    // exchange must move 2-long rows; fingerprints travel only on the
+    // audio lane's exchange (CandidatePairs.pairsHamming)
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val feats = DedupPipeline.features(spark.read.parquet(corpusPath))
+    RunScope.withConf(spark, RunScope.StaticJoins) {
+      val plan = DedupPipeline.candidates(feats).queryExecution.executedPlan
+      val bucketExchanges = plan.collect {
+        case e: ShuffleExchangeExec if e.output.exists(_.name == "bkey") => e.output.map(_.name)
+      }
+      assert(bucketExchanges == Seq(Seq("bkey", "id")), s"pair-gen exchange columns:\n$plan")
+    }
   }
 
   test("sketch aggregate runs as ObjectHashAggregate with partial merge") {

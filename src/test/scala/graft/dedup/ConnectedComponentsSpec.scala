@@ -7,7 +7,6 @@ import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** The distributed CC loop against the driver-local union-find, and the
   * round counts and plan statistics of its iterations, on graphs whose
@@ -76,7 +75,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     // features and edges are committed up front, so the run resumes
     // straight into its CC rounds over exactly this path
-    val dir = Files.createTempDirectory("graft-cc-path").toString
+    val dir = tempDir("graft-cc-path")
     val ids = hashedIds(256, 11L)
     val features = ids.zipWithIndex.map { case (id, i) => (s"clip-$i", id) }.toDF("clip_id", "id")
     SnapshotLog.commit(features, s"$dir/features", "features", Seq("input"))

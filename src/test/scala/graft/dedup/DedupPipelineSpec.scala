@@ -8,7 +8,6 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftshim.PlanShim
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 /** The BASELINE.json headline gate: dup-pair recall >= 0.99 of the Spark
@@ -118,7 +117,7 @@ class DedupPipelineSpec extends AnyFunSuite with SparkTest {
 
   test("above the broadcast ceiling both text drivers verify without broadcasts, same assignments") {
     val low = cfg.copy(broadcastLookupMaxRows = 10)
-    val dir = Files.createTempDirectory("graft-ceiling").toString
+    val dir = tempDir("graft-ceiling")
     for ((driver, run) <- Seq[(String, () => DataFrame)](
         "DedupPipeline" -> (() => DedupPipeline.run(clips, low)),
         "CheckpointedDedup" -> (() => CheckpointedDedup.run(clips, dir, low).get))) {

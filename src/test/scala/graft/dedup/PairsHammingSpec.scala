@@ -12,21 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * COMPLETE even when buckets blow far past the cap (the flat-cap windowed
   * fallback provably loses pairs there — that was d09's n=500 regression). */
 class PairsHammingSpec extends AnyFunSuite with SparkTest {
+  import PairsHammingSpec._
 
-  private val B = SpectralSig.BlockBits
-  private val NB = SpectralSig.NumBlocks
   private val fullMask = (1L << SpectralSig.Bins) - 1
-
-  /** Bucket rows exactly as AudioDedup emits them. */
-  private def bucketRows(fps: Array[Long]): Seq[(Long, Long, Long)] =
-    fps.indices.flatMap { i =>
-      val id = i.toLong * 2654435761L + 11L // distinct, unordered vs index
-      (0 until NB).map { b =>
-        val block = (fps(i) >>> (B * b)) & ((1L << B) - 1)
-        val bkey = ((b.toLong << B) | block) << 2
-        (bkey, id, fps(i))
-      }
-    }
 
   private def emittedPairs(fps: Array[Long], cap: Int): Set[(Long, Long)] = {
     import spark.implicits._
@@ -37,6 +25,18 @@ class PairsHammingSpec extends AnyFunSuite with SparkTest {
     CandidatePairs
       .pairsHamming(df, cfg, SpectralSig.MaxHamming, fullMask, AudioDedup.pinnedMask)
       .select(col("a"), col("b")).as[(Long, Long)].collect().toSet
+  }
+
+  /** union-find: do `pairs` connect all of `ids`? */
+  private def oneComponent(ids: Array[Long], pairs: Set[(Long, Long)]): Boolean = {
+    val idx = ids.zipWithIndex.toMap
+    val root = Array.tabulate(ids.length)(identity)
+    def find(x: Int): Int = { var r = x; while (root(r) != r) { root(r) = root(root(r)); r = root(r) }; r }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(idx(a)), find(idx(b)))
+      if (ra != rb) root(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    ids.indices.map(find).distinct.size == 1
   }
 
   test("recall is complete under a tiny cap on a sparse, zero-block-heavy corpus") {
@@ -97,14 +97,19 @@ class PairsHammingSpec extends AnyFunSuite with SparkTest {
     val ids = Array.tabulate(n)(i => i.toLong * 2654435761L + 11L)
     val got = emittedPairs(fps, cap = 8)
     assert(got.nonEmpty)
-    val idx = ids.zipWithIndex.toMap
-    val root = Array.tabulate(n)(identity)
-    def find(x: Int): Int = { var r = x; while (root(r) != r) { root(r) = root(root(r)); r = root(r) }; r }
-    got.foreach { case (a, b) =>
-      val (ra, rb) = (find(idx(a)), find(idx(b)))
-      if (ra != rb) root(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    assert((0 until n).map(find).distinct.size == 1, "swarm split by the fallback")
+    assert(oneComponent(ids, got), "swarm split by the fallback")
+  }
+
+  test("identical-fingerprint swarm past cap*MaxSalts stays connected through the drain") {
+    // cap = 2 buffers 2,048 ids per run: each of the NB block runs of a
+    // 2,100-member swarm overflows into the windowed drain
+    val n = 2100
+    val fps = Array.fill(n)(0x0800400200100L)
+    val ids = Array.tabulate(n)(i => i.toLong * 2654435761L + 11L)
+    val ov0 = CandidatePairs.overflowRuns(spark)
+    val got = emittedPairs(fps, cap = 2)
+    assert(CandidatePairs.overflowRuns(spark) - ov0 === NB.toLong)
+    assert(oneComponent(ids, got), "swarm split by the drain")
   }
 
   test("splitMask round-robins bits into maxHam+1 nonempty disjoint submasks") {
@@ -114,4 +119,20 @@ class PairsHammingSpec extends AnyFunSuite with SparkTest {
     assert(subs.combinations(2).forall { case Array(x, y) => (x & y) == 0L })
     assert(subs.forall(_ != 0L)) // popcount(m)=28 >= 4
   }
+}
+
+object PairsHammingSpec {
+  private val B = SpectralSig.BlockBits
+  private val NB = SpectralSig.NumBlocks
+
+  /** Bucket rows exactly as AudioDedup emits them. */
+  def bucketRows(fps: Array[Long]): Seq[(Long, Long, Long)] =
+    fps.indices.flatMap { i =>
+      val id = i.toLong * 2654435761L + 11L // distinct, unordered vs index
+      (0 until NB).map { b =>
+        val block = (fps(i) >>> (B * b)) & ((1L << B) - 1)
+        val bkey = ((b.toLong << B) | block) << 2
+        (bkey, id, fps(i))
+      }
+    }
 }

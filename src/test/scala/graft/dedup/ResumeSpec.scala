@@ -16,8 +16,7 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
 
   private def clips = CorpusGen.clips(spark, n).toDF()
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-resume-$tag").toString
+  private def tmpDir(tag: String): String = tempDir(s"graft-resume-$tag")
 
   private def assignmentsOf(workDir: String): Map[String, Long] =
     CheckpointedDedup.run(clips, workDir, cfg).get
