@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   */
 object DedupJob {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: DedupJob <nClips> <outDir> [cores]")
+    require(args.length >= 2, "usage: DedupJob <nClips> <outDir> [cores] [checkpointDir]")
     val n = args(0).toInt
     val outDir = args(1)
     val cores = if (args.length > 2) args(2) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")

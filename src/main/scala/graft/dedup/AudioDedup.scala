@@ -31,9 +31,10 @@ import org.apache.spark.sql.functions._
   *     the uniform hash id — no skew; AQE picks the strategy) and are
   *     verified by the frozen predicate: bit_count(fp_a ^ fp_b) <=
   *     MaxHamming AND codegen cosine(sig_a, sig_b) >= MinCosine.
-  *  5. Verified edges cluster via [[ConnectedComponents]] (label-table-only
-  *     motion per round) and assignments/representatives reuse
-  *     [[DedupPipeline.assignments]].
+  *  5. Steps 1 and 2–4 are this lane's features and edges in
+  *     [[DedupPipeline.stages]], kept [[DedupPipeline.InMemory]]: edges
+  *     cluster via [[ConnectedComponents]], assignments/representatives
+  *     are [[DedupPipeline.assignments]].
   *
   * Output: (clip_id, id, cluster, rep_clip_id, is_rep) — cluster is the min
   * hash id of the audio component, rep the lexicographically smallest
@@ -104,10 +105,6 @@ object AudioDedup {
 
   def run(clips: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame =
     RunScope(clips) { (_, _) =>
-      val feats = RunScope.persist(features(clips, cfg))
-      val edges = RunScope.persist(verifiedEdges(feats, cfg))
-      Some(DedupPipeline
-        .assignments(feats.select(col("clip_id"), col("id")), ConnectedComponents.labels(edges, cfg))
-        .localCheckpoint(true))
+      DedupPipeline.stages(clips, DedupPipeline.InMemory(cfg))(features(_, cfg), verifiedEdges(_, cfg))
     }.get
 }

@@ -9,11 +9,12 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * (SURVEY.md §2.2 P10; north rule "resumes from Iceberg-snapshot-aligned
   * checkpoints with per-partition lineage and accumulator metrics").
   *
-  * Every stage commits its output through [[SnapshotLog]] (immutable data
-  * files + versioned manifest + atomic latest pointer). A killed run leaves
-  * either a fully committed snapshot (resume skips the stage) or an
-  * uncommitted torn write (resume recomputes the stage) — never a half-read
-  * state.
+  * The text lane through [[DedupPipeline.stages]], as DedupPipeline.run,
+  * under a committing policy: every stage commits its output through
+  * [[SnapshotLog]] (immutable data files + versioned manifest + atomic
+  * latest pointer) and reads it back. A killed run leaves either a fully
+  * committed snapshot (resume skips the stage) or an uncommitted torn write
+  * (resume recomputes the stage) — never a half-read state.
   *
   * CC is [[ConnectedComponents.run]]'s loop: its per-check callback commits
   * each round's labels as the next version of one snapshot table,
@@ -28,90 +29,72 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   */
 object CheckpointedDedup {
 
-  private def metric(workDir: String, stage: String, rows: Long, ms: Long,
-                     extra: String = ""): Unit = {
-    Files.createDirectories(Paths.get(workDir))
-    val line =
-      s"""{"stage":"$stage","rows":$rows,"elapsed_ms":$ms$extra}\n"""
-    Files.writeString(Paths.get(workDir, "metrics.jsonl"), line,
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
-
-  private def stageTable(workDir: String, name: String): String = s"$workDir/$name"
-
-  /** Compute-or-load one stage through the snapshot log. */
-  private def stage(workDir: String, name: String, parents: Seq[String],
-                    spark: SparkSession)(compute: => DataFrame): DataFrame = {
-    val dir = stageTable(workDir, name)
-    if (SnapshotLog.exists(dir)) {
-      SnapshotLog.read(spark, dir)
-    } else {
-      val t0 = System.nanoTime()
-      val snap = SnapshotLog.commit(compute, dir, name, parents)
-      metric(workDir, name, snap.rows, (System.nanoTime() - t0) / 1000000)
-      SnapshotLog.read(spark, dir)
-    }
-  }
-
-  /** Run (or resume) the pipeline. `stopAfter` aborts after the named stage
-    * commits — the kill/restart test hook. Returns assignments unless
-    * stopped early. Session conf and cache release follow
-    * [[RunScope.textLane]], the same as DedupPipeline.run: killed or
-    * complete, the run leaves no cache behind (sym, the per-round label
-    * checkpoints, their internal pins) — the returned assignments read from
-    * their snapshot. */
+  /** Run (or resume) the pipeline. `stopAfter` is the kill/restart test
+    * hook: the run returns None once the named stage (`features`, `edges`,
+    * `labels_round_<k>`, `labels_converged`, `assignments`) is committed or
+    * read back; a CC that never commits that round runs to the end. Session
+    * conf and cache release follow [[RunScope.textLane]]: killed or
+    * complete, the run leaves no cache behind — the returned assignments
+    * read from their snapshot. */
   def run(clips: DataFrame, workDir: String,
           cfg: DedupConfig = DedupConfig.default,
           stopAfter: Option[String] = None): Option[DataFrame] =
-    RunScope.textLane(clips, cfg)(runStages(clips, workDir, _, stopAfter, _))
-
-  private def runStages(clips: DataFrame, workDir: String,
-                        cfg: DedupConfig,
-                        stopAfter: Option[String],
-                        p: Int): Option[DataFrame] = {
-    val spark = clips.sparkSession
-
-    // a fully completed workDir is a pure read: skip straight to the
-    // committed assignments instead of re-materializing sym + labels
-    if (SnapshotLog.exists(stageTable(workDir, "assignments")))
-      return Some(SnapshotLog.read(spark, stageTable(workDir, "assignments")))
-
-    val features = stage(workDir, "features", Seq("input"), spark) {
-      // features is a map-only projection, so its natural partitioning is
-      // the input file layout (32 corpus files at n=1000); the clamp-sized
-      // repartition keeps the committed table — and every downstream scan
-      // of it — at p files instead of 32 near-empty ones
-      DedupPipeline.features(clips, cfg).repartition(p)
+    RunScope.textLane(clips, cfg) { (eff, p) =>
+      val done = s"$workDir/assignments"
+      // a fully completed workDir is a pure read: skip straight to the
+      // committed assignments instead of re-materializing sym + labels
+      if (SnapshotLog.exists(done)) Some(SnapshotLog.read(clips.sparkSession, done))
+      else DedupPipeline.stages(clips, new Committed(clips.sparkSession, workDir, p, stopAfter))(
+        DedupPipeline.features(_, eff),
+        f => DedupPipeline.verifiedEdges(f, DedupPipeline.candidates(f, eff), eff))
     }
-    if (stopAfter.contains("features")) return None
-    RunScope.persist(features)
-    val edges = stage(workDir, "edges", Seq("features"), spark) {
-      DedupPipeline.verifiedEdges(features, DedupPipeline.candidates(features, cfg), cfg)
-    }
-    if (stopAfter.contains("edges")) return None
 
-    // ---- CC rounds, one snapshot version per round -----------------------
-    val labelsDir = stageTable(workDir, "labels")
-    val start = SnapshotLog.latestStage(labelsDir).map(snap => ConnectedComponents.Start(
-      SnapshotLog.read(spark, labelsDir).localCheckpoint(true), snap.version + 1,
-      snap.stage == "labels_converged"))
-    var t0 = System.nanoTime()
-    val labels = ConnectedComponents.run(edges, start, onCheck = { (next, round, converged, sum) =>
-      val stageName = if (converged) "labels_converged" else s"labels_round_$round"
-      // `next` is already checkpointed and bit-identical to the committed
-      // parquet (long columns round-trip exactly): the loop carries it
-      // forward, which skips a read-back + re-materialization per round
-      val snap = SnapshotLog.commit(next, labelsDir, stageName, Seq("edges"))
-      metric(workDir, stageName, snap.rows, (System.nanoTime() - t0) / 1000000,
-        s""","label_sum":$sum""")
-      t0 = System.nanoTime()
-      !stopAfter.contains(stageName)
-    })
-    if (stopAfter.exists(_.startsWith("labels"))) return None
+  private final class Committed(spark: SparkSession, workDir: String, p: Int,
+                                stopAfter: Option[String]) extends DedupPipeline.Materialize {
 
-    val assignments = stage(workDir, "assignments", Seq("features", "labels"), spark) {
-      DedupPipeline.assignments(features, labels)
+    // features is a map-only projection laid out like the input files (32
+    // corpus files at n=1000): the clamp-sized repartition keeps the table
+    // and every downstream scan of it at p files, not 32 near-empty ones
+    def features(compute: => DataFrame) =
+      stage("features", "input")(compute.repartition(p)).map(RunScope.persist)
+
+    def edges(compute: => DataFrame) = stage("edges", "features")(compute)
+
+    def labels(edges: DataFrame) = {
+      val dir = s"$workDir/labels"
+      val start = SnapshotLog.latestStage(dir).map(snap => ConnectedComponents.Start(
+        SnapshotLog.read(spark, dir).localCheckpoint(true), snap.version + 1,
+        snap.stage == "labels_converged"))
+      var stopped = false
+      var t0 = System.nanoTime()
+      val labels = ConnectedComponents.run(edges, start, onCheck = { (next, round, converged, sum) =>
+        val name = if (converged) "labels_converged" else s"labels_round_$round"
+        // `next` is already checkpointed and bit-identical to the committed
+        // parquet (long columns round-trip exactly): the loop carries it
+        // forward, which skips a read-back + re-materialization per round
+        metric(name, SnapshotLog.commit(next, dir, name, Seq("edges")).rows, t0, s""","label_sum":$sum""")
+        t0 = System.nanoTime()
+        stopped = stopAfter.contains(name)
+        !stopped
+      })
+      if (stopped) None else Some(labels)
     }
-    Some(assignments)
+
+    def assignments(compute: => DataFrame) = stage("assignments", "features", "labels")(compute)
+
+    /** Compute-or-load one stage through the snapshot log; None if the run
+      * stops after it. */
+    private def stage(name: String, parents: String*)(compute: => DataFrame): Option[DataFrame] = {
+      val dir = s"$workDir/$name"
+      val t0 = System.nanoTime()
+      if (!SnapshotLog.exists(dir)) metric(name, SnapshotLog.commit(compute, dir, name, parents).rows, t0)
+      val out = SnapshotLog.read(spark, dir)
+      if (stopAfter.contains(name)) None else Some(out)
+    }
+
+    private def metric(name: String, rows: Long, t0: Long, extra: String = ""): Unit =
+      Files.writeString(Paths.get(workDir, "metrics.jsonl"),
+        s"""{"stage":"$name","rows":$rows,"elapsed_ms":${(System.nanoTime() - t0) / 1000000}$extra}\n""",
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 }

@@ -104,22 +104,12 @@ object DedupPipeline {
     */
   def verifiedEdges(features: DataFrame, cands: DataFrame,
                     cfg: DedupConfig = DedupConfig.default): DataFrame = {
-    // narrow dedicated caches: the pair stream joins against these, and
-    // their small, ACCURATE cached size lets AQE flip the sort-merge joins
-    // to broadcast at bench scale — the pair stream then probes in place
-    // instead of being shuffled once per lookup side. (At 10^12 rows the
-    // same plans stay sort-merge joins: the decision is adaptive, not a
-    // hard-coded hint.) Before this split the lookups read the WIDE
-    // features cache (norm + bands + fps columns along for the ride) and
-    // the pair stream was exchanged with both norm strings attached —
-    // 667 MB of shuffle for 160k clips, the largest data motion in the
-    // whole pipeline.
-    // pruned projections OFF the columnar features cache — the in-memory
-    // relation serves column subsets without materializing dedicated
-    // copies. (These were separate persists when the broadcast decision
-    // was AQE-stats-driven and needed small accurate cached sizes; with
-    // cfg.broadcastLookups pinning the build side, the extra 300+ MB of
-    // cache and its build scans bought nothing.)
+    // narrow lookups: the pair stream never carries the wide features
+    // columns (at 160k clips that exchange was 667 MB, the pipeline's
+    // largest data motion). They are pruned projections off the columnar
+    // features cache, not caches of their own: with cfg.broadcastLookups
+    // pinning the build side, dedicated caches cost 300+ MB plus their build
+    // scans and bought nothing.
     val slimT = features.select(col("id"), col("simhash"), col("nsh"), col("nlen"))
     val norms = features.select(col("id"), col("norm"))
     // slim lookups use the same one-exchange aliased-self-join shape as the
@@ -254,14 +244,43 @@ object DedupPipeline {
   /** Full run: returns (clip_id, id, cluster, rep_clip_id, is_rep). `cluster`
     * is the min hash-id in the component; `rep_clip_id` the lexicographically
     * smallest clip_id in the cluster (deterministic canonical pick, P11).
-    * Session conf and cache release follow [[RunScope.textLane]]: the
-    * returned table's own (eager) checkpoint is the only cache left. */
+    * The text lane through [[stages]], kept [[InMemory]]; the returned
+    * table's own checkpoint is the only cache [[RunScope.textLane]] leaves. */
   def run(clips: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame =
     RunScope.textLane(clips, cfg) { (eff, _) =>
-      val f = RunScope.persist(features(clips, eff))
-      val edges = RunScope.persist(verifiedEdges(f, candidates(f, eff), eff))
-      Some(assignments(f, ConnectedComponents.labels(edges, eff)).localCheckpoint(true))
+      stages(clips, InMemory(eff))(features(_, eff), f => verifiedEdges(f, candidates(f, eff), eff))
     }.get
+
+  /** How [[stages]] keeps each stage; None stops the run after it. */
+  private[dedup] trait Materialize {
+    def features(compute: => DataFrame): Option[DataFrame]
+    def edges(compute: => DataFrame): Option[DataFrame]
+    def labels(edges: DataFrame): Option[DataFrame]
+    def assignments(compute: => DataFrame): Option[DataFrame]
+  }
+
+  /** The plain drivers' policy: features and edges persist for the run,
+    * CC takes [[ConnectedComponents.labels]]' driver-local shortcut on small
+    * graphs, and the assignments are checkpointed eagerly (only actions plan
+    * under the scope's shuffle clamp). */
+  private[dedup] final case class InMemory(cfg: DedupConfig) extends Materialize {
+    def features(compute: => DataFrame) = Some(RunScope.persist(compute))
+    def edges(compute: => DataFrame) = Some(RunScope.persist(compute))
+    def labels(edges: DataFrame) = Some(ConnectedComponents.labels(edges, cfg))
+    def assignments(compute: => DataFrame) = Some(compute.localCheckpoint(true))
+  }
+
+  /** The one stage graph of the dedup drivers: a lane's features (of the
+    * clips) → its verified edges (of the features) → CC labels →
+    * [[assignments]]. None when a stage stopped the run. */
+  private[dedup] def stages(clips: DataFrame, materialize: Materialize)(
+      featuresOf: DataFrame => DataFrame, edgesOf: DataFrame => DataFrame): Option[DataFrame] =
+    for {
+      f <- materialize.features(featuresOf(clips))
+      edges <- materialize.edges(edgesOf(f))
+      labels <- materialize.labels(edges)
+      out <- materialize.assignments(assignments(f, labels))
+    } yield out
 
   /** Join clip ids to CC labels; absent vertices are their own singleton
     * cluster. Canonical representative = min clip_id per cluster via a

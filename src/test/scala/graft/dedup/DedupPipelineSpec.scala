@@ -108,8 +108,10 @@ class DedupPipelineSpec extends AnyFunSuite with SparkTest {
     assert(out1.count() == 200)
     val out2 = DedupPipeline.run(clips, cfg)
     assert(out2.count() == 200)
-    val keep = org.apache.spark.sql.graftshim.PlanShim.checkpointRddIds(out1) ++
-      org.apache.spark.sql.graftshim.PlanShim.checkpointRddIds(out2)
+    // the audio lane runs the same stage graph under its own scope
+    val out3 = AudioDedup.run(CorpusGen.clips(spark, 200).toDF(), cfg)
+    assert(out3.count() == 200)
+    val keep = Seq(out1, out2, out3).flatMap(PlanShim.checkpointRddIds).toSet
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before -- keep
     assert(leaked.isEmpty,
       s"pipeline leaked persistent RDDs: $leaked (VERDICT r2 #2 regression)")

@@ -4,6 +4,7 @@ import graft.SparkTest
 import graft.core.DedupConfig
 import graft.corpus.CorpusGen
 import graft.snapshot.SnapshotLog
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
@@ -18,10 +19,12 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
 
   private def tmpDir(tag: String): String = tempDir(s"graft-resume-$tag")
 
-  private def assignmentsOf(workDir: String): Map[String, Long] =
-    CheckpointedDedup.run(clips, workDir, cfg).get
-      .select("clip_id", "cluster").collect()
+  private def clusterOf(assign: DataFrame): Map[String, Long] =
+    assign.select("clip_id", "cluster").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private def assignmentsOf(workDir: String): Map[String, Long] =
+    clusterOf(CheckpointedDedup.run(clips, workDir, cfg).get)
 
   private lazy val uninterrupted: Map[String, Long] = assignmentsOf(tmpDir("full"))
 
@@ -78,6 +81,23 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     assert(metrics.contains("\"stage\":\"features\""))
     assert(metrics.contains("\"stage\":\"labels_converged\""))
     assert(metrics.contains("\"stage\":\"assignments\""))
+    // the benchmark reads these lines: stages in run order, each with its
+    // row count and elapsed time
+    val lines = metrics.split("\n").toSeq
+    val stages = lines.map(l => "\"stage\":\"([^\"]+)\"".r.findFirstMatchIn(l).get.group(1))
+    val rounds = stages.drop(2).dropRight(2)
+    assert(stages.take(2) == Seq("features", "edges") &&
+      stages.takeRight(2) == Seq("labels_converged", "assignments") &&
+      rounds == rounds.indices.map(i => s"labels_round_$i"), s"stage order: $stages")
+    lines.foreach(l => assert(l.matches(""".*"rows":\d+,"elapsed_ms":\d+.*"""), l))
+  }
+
+  test("a kill point CC never reaches does not stop the run") {
+    val dir = tmpDir("nokill")
+    val got = CheckpointedDedup.run(clips, dir, cfg, stopAfter = Some("labels_round_49"))
+    assert(got.isDefined, "converged run reported as stopped")
+    assert(clusterOf(got.get) == uninterrupted)
+    assert(SnapshotLog.latestStage(s"$dir/labels").exists(_.stage == "labels_converged"))
   }
 
   test("a corpus without near-duplicates converges on the empty graph and resumes as a pure read") {
