@@ -3,13 +3,16 @@ package graft
 import graft.core.DedupConfig
 import graft.corpus.CorpusGen
 import graft.dedup.{CheckpointedDedup, DedupPipeline}
-import org.apache.spark.sql.SparkSession
 
 /** spark-submit entrypoint for the dedup pipeline (BASELINE.json north_rule:
-  * "run via spark-submit on a multi-executor cluster"). In the sandbox it
-  * runs in local[N]; on a cluster, drop the master override and submit.
+  * "run via spark-submit on a multi-executor cluster"). Without a master
+  * it runs in local[cores]; under spark-submit the submitted master wins.
+  * The session comes from [[Sessions]]: any `spark.*` property or `--conf`
+  * overrides its defaults.
   *
   * Usage: DedupJob <nClips> <outDir> [cores] [checkpointDir]
+  *   - `cores` (default: the host's, see [[Host]]) sets the shuffle width
+  *     and, when no master is given, the `local[cores]` master,
   *   - generates the deterministic corpus at nClips (FIXTURES.md),
   *   - runs the full near-dup pipeline — snapshot-checkpointed + resumable
   *     when a checkpointDir is given (kill it mid-run; rerun resumes),
@@ -22,20 +25,8 @@ object DedupJob {
     require(args.length >= 2, "usage: DedupJob <nClips> <outDir> [cores] [checkpointDir]")
     val n = args(0).toInt
     val outDir = args(1)
-    val cores = if (args.length > 2) args(2) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-
-    val builder = SparkSession.builder()
-      .appName(s"graft-dedup-n$n")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // local master only when not already provided by spark-submit
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(s"local[$cores]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = args.lift(2).map(_.toInt).getOrElse(Host.current.cores)
+    val spark = Sessions.create(s"graft-dedup-n$n", cores)
 
     val t0 = System.nanoTime()
     val clips = CorpusGen.clips(spark, n).toDF()

@@ -55,8 +55,12 @@ object EmbedDedup {
       col("vec_id").as("id"))
     val cand = CandidatePairs.pairsPacked(buckets, cfg)
 
-    val embA = vectors.select(col("vec_id").as("a"), col("embedding").as("a_emb"))
-    val embB = vectors.select(col("vec_id").as("b"), col("embedding").as("b_emb"))
+    // sort-merge joins, never an auto-broadcast: at 1M vectors the cached
+    // embedding table's estimate fits a 256m broadcast threshold, but its
+    // hash relation does not fit the driver (measured at 4 cores with an 8g
+    // heap: 4 GB requested, the run failed)
+    val embA = vectors.select(col("vec_id").as("a"), col("embedding").as("a_emb")).hint("merge")
+    val embB = vectors.select(col("vec_id").as("b"), col("embedding").as("b_emb")).hint("merge")
     // persisted BEFORE the gating count, mirroring DedupPipeline.run:
     // without the pin, the count materializes the whole LSH -> pair gen ->
     // double embedding join -> cosine verify chain and then runLocal's

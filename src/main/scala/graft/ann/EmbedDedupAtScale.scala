@@ -1,7 +1,6 @@
 package graft.ann
 
 import graft.corpus.EmbedGen
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale evidence for [[EmbedDedup]]: cluster the deterministic planted
@@ -13,21 +12,13 @@ import org.apache.spark.sql.functions._
   * cosine verify).
   *
   * `sbt -batch "runMain graft.ann.EmbedDedupAtScale [n] [cores]"` →
-  * one JSON line {"job":"embed_dedup_scale",...}. Results recorded in
-  * BASELINE.md (round 5). */
+  * one JSON line {"job":"embed_dedup_scale",...}; `cores` defaults to the
+  * host's and sets the shuffle width. Results recorded in BASELINE.md. */
 object EmbedDedupAtScale {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 1000000L
-    val cores = if (args.length > 1) args(1).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-embed-dedup-scale")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "127.0.0.1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = if (args.length > 1) args(1).toInt else graft.Host.current.cores
+    val spark = graft.Sessions.create("graft-embed-dedup-scale", cores)
     val clusterSize = 20L
     val vecs = EmbedGen.vectorsCached(spark, n)
       .select(col("vec_id"), col("embedding"))
