@@ -74,7 +74,9 @@ object Bench {
 
   /** Heap (MB) of a pre-touched ladder child: what MemTotal leaves after the
     * parent's own max heap and a reserve of an eighth of MemTotal (at least
-    * 2 GB) for off-heap memory, the page cache and the build tool — capped
+    * 2 GB) for off-heap memory, the page cache and the build tool's JVM
+    * (~0.6 GB resident under sbt). Shuffle files are not in the budget:
+    * below 64 GB MemTotal the session factory keeps them on disk — capped
     * at the 28g the children were tuned with on a 32-core host, and never
     * below 1 GB. */
   private[graft] def childHeapMb(memTotalMb: Long, parentMaxMb: Long): Long =
@@ -522,10 +524,8 @@ object Bench {
     // q01's aggregate ran 3 tasks at local[32]). 4m bins make each staged
     // file its own split, so scans parallelize to the full session width.
     // Runtime conf: applies to the query session only, never the ladder
-    // children (their corpus layout is already 32-way); a caller's
-    // -Dspark.sql.files.maxPartitionBytes wins.
-    if (!sys.props.contains("spark.sql.files.maxPartitionBytes"))
-      spark0.conf.set("spark.sql.files.maxPartitionBytes", "4m")
+    // children (their corpus layout is already 32-way).
+    spark0.conf.set("spark.sql.files.maxPartitionBytes", "4m")
     val stagedDir = stageSfTables(spark0, sfDir, cores)
     try spark0.read.parquet(s"$stagedDir/lineitem.parquet")
       .groupBy(col("l_returnflag")).count()

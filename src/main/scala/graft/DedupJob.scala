@@ -11,8 +11,10 @@ import graft.dedup.{CheckpointedDedup, DedupPipeline}
   * overrides its defaults.
   *
   * Usage: DedupJob <nClips> <outDir> [cores] [checkpointDir]
-  *   - `cores` (default: the host's, see [[Host]]) sets the shuffle width
-  *     and, when no master is given, the `local[cores]` master,
+  *   - `cores` sets the shuffle width and, when no master is given, the
+  *     `local[cores]` master. It defaults to the host's (see [[Host]]) on a
+  *     local master and is required on a cluster master, whose task slots
+  *     the driver cannot see,
   *   - generates the deterministic corpus at nClips (FIXTURES.md),
   *   - runs the full near-dup pipeline — snapshot-checkpointed + resumable
   *     when a checkpointDir is given (kill it mid-run; rerun resumes),
@@ -25,7 +27,7 @@ object DedupJob {
     require(args.length >= 2, "usage: DedupJob <nClips> <outDir> [cores] [checkpointDir]")
     val n = args(0).toInt
     val outDir = args(1)
-    val cores = args.lift(2).map(_.toInt).getOrElse(Host.current.cores)
+    val cores = args.lift(2).map(_.toInt).getOrElse(Sessions.defaultCores())
     val spark = Sessions.create(s"graft-dedup-n$n", cores)
 
     val t0 = System.nanoTime()

@@ -39,9 +39,17 @@ object Sessions {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 
+  /** Below this MemTotal the shuffle files stay on disk, in Spark's own
+    * default local dir (java.io.tmpdir): tmpfs holds them in RAM beside the
+    * heaps. On a 16 GB host the 1M-vector ANN lanes of graft.Bench put
+    * 4.6 GB of shuffle files in /dev/shm beside the driver's 8g heap, and
+    * MemAvailable fell under 1 GB, still falling, before the run was
+    * stopped. */
+  private val TmpfsMinMemMb = 64L * 1024
+
   /** Applied on a `local…` master only: every task, broadcast and shuffle
     * block stays inside one host. */
-  private def singleHost(env: Map[String, String]): Seq[(String, String)] = Seq(
+  private def singleHost(memTotalMb: Long, env: Map[String, String]): Seq[(String, String)] = Seq(
     // local mode: broadcast value materialization is serialized across
     // task threads (TorrentBroadcast KeyLock) — uncompressed pieces make
     // the one-time build several times cheaper (no network to save)
@@ -59,16 +67,19 @@ object Sessions {
     "spark.shuffle.file.buffer" -> "1m",
     "spark.shuffle.unsafe.file.output.buffer" -> "1m",
     "spark.io.compression.lz4.blockSize" -> "512k",
-    "spark.local.dir" -> env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"),
-    "spark.driver.host" -> "127.0.0.1")
+    "spark.driver.host" -> "127.0.0.1") ++
+    env.get("SPARK_LOCAL_DIRS")
+      .orElse(Option.when(memTotalMb >= TmpfsMinMemMb)("/dev/shm/graft-spark"))
+      .map("spark.local.dir" -> _)
 
-  /** The conf the factory applies, given the `spark.*` keys the caller
-    * already set (`given`) and the process environment. Pure: no session. */
-  def conf(appName: String, cores: Int, given: Map[String, String],
+  /** The conf the factory applies on a host with `memTotalMb` of memory,
+    * given the `spark.*` keys the caller already set (`given`) and the
+    * process environment. Pure: no session. */
+  def conf(appName: String, cores: Int, memTotalMb: Long, given: Map[String, String],
            env: Map[String, String]): Seq[(String, String)] = {
     val master = given.getOrElse("spark.master", s"local[$cores]")
     val defaults = everywhere(appName, cores) ++
-      (if (master.startsWith("local")) singleHost(env) else Nil)
+      (if (master.startsWith("local")) singleHost(memTotalMb, env) else Nil)
     defaults.filterNot { case (k, _) => given.contains(k) }
   }
 
@@ -76,9 +87,19 @@ object Sessions {
   def callerConf: Map[String, String] =
     sys.props.toMap.filter { case (k, _) => k.startsWith("spark.") }
 
-  def create(appName: String, cores: Int = Host.current.cores): SparkSession = {
+  /** The cores of a session whose caller gives none: the host's. On a
+    * non-local master the driver's cores say nothing of the cluster's task
+    * slots, and the shuffle width AQE starts from would follow the size of
+    * the driver box, so there the caller must give them. */
+  def defaultCores(given: Map[String, String] = callerConf): Int = {
+    require(given.get("spark.master").forall(_.startsWith("local")),
+      "a non-local spark.master needs an explicit cores count: the cluster's task slots")
+    Host.current.cores
+  }
+
+  def create(appName: String, cores: Int = defaultCores()): SparkSession = {
     val builder = SparkSession.builder()
-    conf(appName, cores, callerConf, sys.env).foreach { case (k, v) => builder.config(k, v) }
+    conf(appName, cores, Host.current.memTotalMb, callerConf, sys.env).foreach { case (k, v) => builder.config(k, v) }
     val s = builder.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

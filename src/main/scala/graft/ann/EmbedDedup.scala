@@ -40,7 +40,7 @@ object EmbedDedup {
     * is never approximate). */
   def clusters(vectors: DataFrame, threshold: Double = 0.45,
                planesPerTable: Int = 4, tables: Int = 32, seed: Long = 42L,
-               cfg: DedupConfig = DedupConfig.default): DataFrame = RunScope(vectors) { (_, _) =>
+               cfg: DedupConfig = DedupConfig.default): DataFrame = RunScope.embedLane(vectors, cfg) { eff =>
     val sigCols = (0 until tables).map(t =>
       hyperplane_sig(col("embedding"), planesPerTable, seed + t))
     val sigs = vectors.select(col("vec_id"),
@@ -55,12 +55,9 @@ object EmbedDedup {
       col("vec_id").as("id"))
     val cand = CandidatePairs.pairsPacked(buckets, cfg)
 
-    // sort-merge joins, never an auto-broadcast: at 1M vectors the cached
-    // embedding table's estimate fits a 256m broadcast threshold, but its
-    // hash relation does not fit the driver (measured at 4 cores with an 8g
-    // heap: 4 GB requested, the run failed)
-    val embA = vectors.select(col("vec_id").as("a"), col("embedding").as("a_emb")).hint("merge")
-    val embB = vectors.select(col("vec_id").as("b"), col("embedding").as("b_emb")).hint("merge")
+    val emb = if (eff.broadcastLookups) broadcast(vectors) else vectors
+    val embA = emb.select(col("vec_id").as("a"), col("embedding").as("a_emb"))
+    val embB = emb.select(col("vec_id").as("b"), col("embedding").as("b_emb"))
     // persisted BEFORE the gating count, mirroring DedupPipeline.run:
     // without the pin, the count materializes the whole LSH -> pair gen ->
     // double embedding join -> cosine verify chain and then runLocal's

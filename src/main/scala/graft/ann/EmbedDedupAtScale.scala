@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object EmbedDedupAtScale {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 1000000L
-    val cores = if (args.length > 1) args(1).toInt else graft.Host.current.cores
+    val cores = if (args.length > 1) args(1).toInt else graft.Sessions.defaultCores()
     val spark = graft.Sessions.create("graft-embed-dedup-scale", cores)
     val clusterSize = 20L
     val vecs = EmbedGen.vectorsCached(spark, n)

@@ -39,7 +39,9 @@ final case class DedupConfig(
       * as the broadcast build side. Right whenever one executor can hold
       * the corpus' norm table (bench scale, and clusters up to ~10^8
       * medium clips with high executor memory); set false beyond that and
-      * AQE picks the sort-merge plan instead. */
+      * AQE picks the sort-merge plan instead. The embedding lane
+      * ([[graft.dedup.RunScope.embedLane]]) broadcasts its embedding table
+      * under the same flag, up to its own row ceiling. */
     broadcastLookups: Boolean = true,
     /** row-count ceiling above which the text lane
       * ([[graft.dedup.RunScope.textLane]]) ignores broadcastLookups=true and falls back to AQE-chosen joins —

@@ -109,6 +109,26 @@ object RunScope {
     }
   }
 
+  /** Row ceiling for broadcasting the embedding table of an embedding-lane
+    * run. At 2k vectors (sf0.1) the broadcast plan ran d10 in a median
+    * 3.28 s against 5.00 s sort-merged (10 alternating pairs, 4 cores, same
+    * answer); at 1M the auto-broadcast build asked for 4 GB of an 8g
+    * driver heap and the run failed. */
+  private val EmbedBroadcastMaxRows = 100000L
+
+  /** An embedding-lane run (EmbedDedup.clusters): [[apply]] under
+    * [[NoAutoBroadcast]]. `body` gets the effective config: broadcastLookups
+    * stays on only up to [[EmbedBroadcastMaxRows]] vectors, where the lane
+    * broadcasts its embedding table by hint; above it the joins sort-merge. */
+  def embedLane(vectors: DataFrame, cfg: DedupConfig)(
+      body: DedupConfig => Option[DataFrame]): Option[DataFrame] =
+    apply(vectors) { (rows, _) =>
+      val eff =
+        if (cfg.broadcastLookups && rows > EmbedBroadcastMaxRows) cfg.copy(broadcastLookups = false)
+        else cfg
+      withConf(vectors.sparkSession, NoAutoBroadcast)(body(eff))
+    }
+
   /** A text-lane run (DedupPipeline.run, CheckpointedDedup.run): [[apply]]
     * plus the join policy. Broadcast-pinned verification lookups are only
     * safe while one executor can hold the corpus' slim+norm tables, so above

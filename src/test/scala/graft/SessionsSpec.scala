@@ -12,7 +12,7 @@ class SessionsSpec extends AnyFunSuite {
     "spark.local.dir", "spark.driver.host")
 
   test("a local master gets the shared and the single-host settings") {
-    val conf = Sessions.conf("app", 4, Map.empty, Map("SPARK_LOCAL_DIRS" -> "/scratch/x")).toMap
+    val conf = Sessions.conf("app", 4, 16L * 1024, Map.empty, Map("SPARK_LOCAL_DIRS" -> "/scratch/x")).toMap
     assert(conf("spark.master") == "local[4]")
     assert(conf("spark.app.name") == "app")
     assert(conf("spark.sql.shuffle.partitions") == "4")
@@ -21,15 +21,20 @@ class SessionsSpec extends AnyFunSuite {
     assert(conf("spark.ui.enabled") == "false")
     singleHostKeys.foreach(k => assert(conf.contains(k), k))
     assert(conf("spark.local.dir") == "/scratch/x")
-    val noEnv = Sessions.conf("app", 4, Map.empty, Map.empty).toMap
-    assert(noEnv("spark.local.dir") == "/dev/shm/graft-spark")
+    // without SPARK_LOCAL_DIRS, shuffle files go to tmpfs only on a host
+    // with the memory to hold them beside the heaps
+    val bigHost = Sessions.conf("app", 4, 256L * 1024, Map.empty, Map.empty).toMap
+    assert(bigHost("spark.local.dir") == "/dev/shm/graft-spark")
+    val smallHost = Sessions.conf("app", 4, 16L * 1024, Map.empty, Map.empty).toMap
+    assert(!smallHost.contains("spark.local.dir"))
+    assert(smallHost("spark.broadcast.compress") == "false")
     // Spark's own defaults are not repeated
     Seq("spark.sql.adaptive.enabled", "spark.shuffle.compress", "spark.shuffle.spill.compress")
       .foreach(k => assert(!conf.contains(k), k))
   }
 
   test("a non-local master gets no single-host settings and keeps its master") {
-    val conf = Sessions.conf("app", 16, Map("spark.master" -> "spark://head:7077"), Map.empty).toMap
+    val conf = Sessions.conf("app", 16, 256L * 1024, Map("spark.master" -> "spark://head:7077"), Map.empty).toMap
     assert(!conf.contains("spark.master"))
     assert(conf("spark.sql.shuffle.partitions") == "16")
     singleHostKeys.foreach(k => assert(!conf.contains(k), k))
@@ -41,13 +46,19 @@ class SessionsSpec extends AnyFunSuite {
     sys.props(key) = "1s"
     try {
       assert(Sessions.callerConf(key) == "1s")
-      val conf = Sessions.conf("app", 4, Sessions.callerConf, Map.empty).toMap
+      val conf = Sessions.conf("app", 4, 256L * 1024, Sessions.callerConf, Map.empty).toMap
       assert(!conf.contains(key))
       assert(conf("spark.broadcast.compress") == "false")
     } finally before match {
       case Some(v) => sys.props(key) = v
       case None => sys.props -= key
     }
+  }
+
+  test("a session's cores default to the host's on a local master only") {
+    assert(Sessions.defaultCores(Map.empty) == Host.current.cores)
+    assert(Sessions.defaultCores(Map("spark.master" -> "local[2]")) == Host.current.cores)
+    intercept[IllegalArgumentException](Sessions.defaultCores(Map("spark.master" -> "yarn")))
   }
 
   test("the ladder runs only the levels the host has cores for") {
