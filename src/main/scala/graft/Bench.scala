@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *  "queries":{...},"sf":...,"ann":{...},
   *  "dedup":{n, per-level sec/throughput, scaling_efficiency_1to4,
   *           scaling_efficiency_2to8, scaling_efficiency_8to32,
-  *           calibration ratios, deterministic}}
+  *           calibration ratios, checksum, deterministic}}
   *
   * Scaling protocol (BASELINE.md): no real cluster in the sandbox, so the
   * north rule's N→4N executor scaling is evidenced by running the identical
@@ -718,7 +718,8 @@ object Bench {
         s""""reps_$c":${r.fold("null")(_.reps.toString)},""" +
         s""""overflow_runs_$c":${r.fold("null")(_.overflowRuns.toString)}"""
     }.mkString(",")
-    val deterministicJson = s""""deterministic":${levels.map(lv(_).sum).distinct.size == 1}"""
+    val sums = levels.map(lv(_).sum).distinct // the ladder's answer: null if the levels disagree
+    val deterministicJson = s""""checksum":${if (sums.size == 1) sums.head else "null"},"deterministic":${sums.size == 1}"""
     val ladderCore =
       s""""n":$dedupN,$perLevel,""" +
         s""""pinned":$pinned,""" +

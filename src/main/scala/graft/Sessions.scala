@@ -65,7 +65,7 @@ object Sessions {
     // first-touch page allocation on tmpfs is slow (~40-60 MB/s measured
     // on a 32-core VM); large write buffers cut shuffle write() calls ~16x
     "spark.shuffle.file.buffer" -> "1m",
-    "spark.shuffle.unsafe.file.output.buffer" -> "1m",
+    "spark.shuffle.localDisk.file.output.buffer" -> "1m",
     "spark.io.compression.lz4.blockSize" -> "512k",
     "spark.driver.host" -> "127.0.0.1") ++
     env.get("SPARK_LOCAL_DIRS")

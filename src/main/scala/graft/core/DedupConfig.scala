@@ -55,13 +55,13 @@ final case class DedupConfig(
       * vs the Misra-Gries sketch (O(k) driver bytes, the 10^12-row path,
       * but partition-dependent near the threshold). */
     sketchHotKeys: Boolean = false,
-    /** edge-count ceiling for the driver-local union-find CC fast path
-      * ([[graft.dedup.ConnectedComponents.runLocal]]): at or below this the
-      * verified dup graph is a few MB and ~15 scheduler round-trips of
-      * near-empty stages cost more than the whole contraction; above it the
-      * iterative min-label loop runs (the production path — the 160k-clip
-      * bench graph is ~5x this ceiling and always takes it). Output is
-      * bit-identical either way (checksum- and oracle-gated). */
+    /** edge-count ceiling for running the CC rounds on the driver
+      * ([[graft.dedup.ConnectedComponents.run]]): at or below this the
+      * verified dup graph is a few MB, collected once, and ~3 scheduler
+      * round-trips of near-empty stages per round cost more than the whole
+      * contraction; above it each round runs as Spark jobs (the production
+      * path — the 160k-clip bench graph is ~5x this ceiling). Every round's
+      * labels are the same either way, so checkpointed runs commit the same. */
     ccLocalMaxEdges: Long = 100000L,
     /** exact 64-bit id guarantee: detect hash_id collisions across distinct
       * clip_ids (one slim map-side-combined aggregation at ingest) and

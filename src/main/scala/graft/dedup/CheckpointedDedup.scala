@@ -19,10 +19,9 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * CC is [[ConnectedComponents.run]]'s loop: its per-check callback commits
   * each round's labels as the next version of one snapshot table,
   * `labels_round_<round>` or, at the fixpoint, `labels_converged`, so a
-  * kill mid-iteration resumes from the last committed round. This driver
-  * never takes the `ccLocalMaxEdges` union-find shortcut of the plain
-  * drivers: a driver-local contraction commits no rounds, and resume
-  * granularity (and every kill at `labels_round_0`) needs them.
+  * kill mid-iteration resumes from the last committed round. Its executor
+  * is chosen from the committed edges' row count, and both executors
+  * commit the same tables, so a run may resume on the other one.
   *
   * Per-partition lineage = `part_rows` in each manifest; run metrics
   * (stage, rows, elapsed) are appended to `<workDir>/metrics.jsonl`.
@@ -44,12 +43,12 @@ object CheckpointedDedup {
       // a fully completed workDir is a pure read: skip straight to the
       // committed assignments instead of re-materializing sym + labels
       if (SnapshotLog.exists(done)) Some(SnapshotLog.read(clips.sparkSession, done))
-      else DedupPipeline.stages(clips, new Committed(clips.sparkSession, workDir, p, stopAfter))(
+      else DedupPipeline.stages(clips, new Committed(clips.sparkSession, workDir, p, eff, stopAfter))(
         DedupPipeline.features(_, eff),
         f => DedupPipeline.verifiedEdges(f, DedupPipeline.candidates(f, eff), eff))
     }
 
-  private final class Committed(spark: SparkSession, workDir: String, p: Int,
+  private final class Committed(spark: SparkSession, workDir: String, p: Int, cfg: DedupConfig,
                                 stopAfter: Option[String]) extends DedupPipeline.Materialize {
 
     // features is a map-only projection laid out like the input files (32
@@ -63,15 +62,15 @@ object CheckpointedDedup {
     def labels(edges: DataFrame) = {
       val dir = s"$workDir/labels"
       val start = SnapshotLog.latestStage(dir).map(snap => ConnectedComponents.Start(
-        SnapshotLog.read(spark, dir).localCheckpoint(true), snap.version + 1,
-        snap.stage == "labels_converged"))
+        SnapshotLog.read(spark, dir), snap.version + 1, snap.stage == "labels_converged"))
       var stopped = false
       var t0 = System.nanoTime()
-      val labels = ConnectedComponents.run(edges, start, onCheck = { (next, round, converged, sum) =>
+      val rows = SnapshotLog.manifest(s"$workDir/edges").map(_.rows)
+      val labels = ConnectedComponents.run(edges, cfg, start, rows, { (next, round, converged, sum) =>
         val name = if (converged) "labels_converged" else s"labels_round_$round"
-        // `next` is already checkpointed and bit-identical to the committed
-        // parquet (long columns round-trip exactly): the loop carries it
-        // forward, which skips a read-back + re-materialization per round
+        // the loop carries its own state forward, bit-identical to the
+        // committed parquet (long columns round-trip exactly), which skips
+        // a read-back + re-materialization per round
         metric(name, SnapshotLog.commit(next, dir, name, Seq("edges")).rows, t0, s""","label_sum":$sum""")
         t0 = System.nanoTime()
         stopped = stopAfter.contains(name)

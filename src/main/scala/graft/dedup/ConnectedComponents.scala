@@ -5,9 +5,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.PlanShim
 import org.apache.spark.sql.types.DecimalType
+import java.math.BigInteger
 
-/** Iterative self-join connected components (min-label propagation with
-  * root hooking and pointer jumping), pure DataFrame — SURVEY.md §2.2 P9.
+/** Iterative connected components (min-label propagation with root
+  * hooking and pointer jumping) — SURVEY.md §2.2 P9. One round, two
+  * executors: [[step]] runs it as DataFrame self-joins, and small graphs
+  * run the same round over arrays on the driver (see [[run]]).
   *
   * Discipline grafted from the reference's merge-until-fixpoint contract
   * (`FrequentItems.java:292-308`): per-round state is a mergeable (id →
@@ -154,121 +157,117 @@ object ConnectedComponents {
     if (d == null) java.math.BigDecimal.ZERO else d
   }
 
-  /** Driver-local union-find for SMALL tail graphs. Same output contract as
-    * [[run]]: (id, label) with label = min id in the component — the min of
-    * a component is independent of union order, so the result is
-    * bit-identical to the distributed loop's fixpoint.
-    *
-    * Scale contract: this is the small-graph fast path ONLY — callers gate
-    * on an edge count they already have (the count that materializes
-    * their persisted edges) with a threshold whose collect is trivially
-    * driver-safe (10^5 edges = 1.6 MB). The iterative loop in [[run]]
-    * remains THE production path and the one the 160k-clip bench exercises
-    * (~5x10^5 edges); a tiny dedup tail-graph simply does not need a
-    * cluster, and ~15 scheduler round-trips of 3-task stages cost more
-    * than the entire union-find. */
-  def runLocal(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val pairs = edges.select(col("a"), col("b")).as[(Long, Long)].collect()
-    val idx = new java.util.HashMap[Long, Integer]()
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]
-    val parent = new scala.collection.mutable.ArrayBuffer[Int]
-    def at(x: Long): Int = {
-      val got = idx.get(x)
-      if (got != null) got.intValue()
-      else {
-        val i = ids.length
-        idx.put(x, Integer.valueOf(i)); ids += x; parent += i; i
-      }
-    }
-    def find(i0: Int): Int = { // path halving
-      var i = i0
-      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
-      i
-    }
-    pairs.foreach { case (a, b) =>
-      val ra = find(at(a)); val rb = find(at(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    // java.lang.Long values on purpose: a scala.Long value type would make
-    // `get` unbox absent (null) to 0 silently — caught by the equality spec
-    val minOf = new java.util.HashMap[Integer, java.lang.Long]()
-    var i = 0
-    while (i < ids.length) {
-      val r = Integer.valueOf(find(i))
-      val cur = minOf.get(r)
-      if (cur == null || ids(i) < cur.longValue()) minOf.put(r, java.lang.Long.valueOf(ids(i)))
-      i += 1
-    }
-    val out = new Array[(Long, Long)](ids.length)
-    i = 0
-    while (i < ids.length) {
-      out(i) = (ids(i), minOf.get(Integer.valueOf(find(i))).longValue())
-      i += 1
-    }
-    spark.createDataset(out.toSeq).toDF("id", "label")
-  }
-
   /** Where [[run]] starts instead of at every vertex labelling itself:
-    * carried labels (eagerly checkpointed), the index of the next round,
-    * and whether the carried labels are already the fixpoint. */
+    * carried labels, the index of the next round, and whether the carried
+    * labels are already the fixpoint. */
   final case class Start(labels: DataFrame, round: Int, converged: Boolean)
+
+  /** `(labels, round, converged, labelSum) => continue`, after each round. */
+  type OnCheck = (=> DataFrame, Int, Boolean, java.math.BigDecimal) => Boolean
 
   /** Rounds before [[run]] gives up. */
   private val MaxRounds = 50
 
-  /** The CC of the plain drivers (DedupPipeline, AudioDedup, EmbedDedup):
-    * [[runLocal]] at or below `cfg.ccLocalMaxEdges` edges, else [[run]].
-    * The gating count materializes `edges`, so callers persist it first. */
-  def labels(edges: DataFrame, cfg: DedupConfig): DataFrame =
-    if (edges.count() <= cfg.ccLocalMaxEdges) runLocal(edges) else run(edges)
-
-  /** The one CC loop: rounds of [[step]] until [[labelSum]] stops changing.
+  /** The one CC entry: rounds until the exact label sum stops changing, by
+    * the executor the graph's size chooses ("To Partition, or Not to
+    * Partition", SIGMOD'21): at or below `cfg.ccLocalMaxEdges` edges the
+    * driver collects them once and runs the rounds over arrays
+    * ([[onDriver]]); above it each round is a [[step]] of Spark jobs
+    * ([[onSpark]]). Both give the same (id, label) table every round, so a
+    * run killed on one resumes on the other.
     *
-    * ONE round per convergence check: the check's scan-agg is also the job
-    * that materializes the round's lazy jump tail. Two rounds per check
-    * save that small job every other round, but only a whole unchanged
-    * check (two rounds) confirms the fixpoint, so they run one or two
-    * rounds more: on the chains_ckpt benchmark (kill after the first
-    * committed round, then resume; 4 cores, 8 seeds) 6 rounds instead of 5
-    * and 7.7% more op CPU, on the 160k-clip default mix 4 instead of 3.
+    * Scale contract of the gate: 10^5 edges (1.6 MB) collect trivially, and
+    * below it ~3 scheduler round-trips of near-empty stages per round cost
+    * more than the whole contraction. The Spark executor stays the
+    * production path (the 160k-clip bench graph has ~5x10^5 edges). The
+    * gate counts `edges` (persisted by the callers) unless given `edgeRows`.
     *
-    * After every check `onCheck(labels, round, converged, labelSum)` sees
-    * the round's labels, materialized and checkpointed; false stops the
-    * loop. CheckpointedDedup commits each round through it; the plain
-    * drivers pass none.
+    * After each round `onCheck(labels, round, converged, labelSum)` gets the
+    * labels by name (the driver executor builds its table only if read);
+    * false stops the loop. CheckpointedDedup commits each round through it.
     *
     * @param edges DataFrame with long columns (a, b) — undirected unique pairs.
     * @param start carried labels to resume from (see [[Start]]); an already
-    *              converged start is returned as is, without building sym.
+    *              converged start is returned as is.
     * @return DataFrame (id: Long, label: Long) — label = min id in component.
     */
-  def run(edges: DataFrame, start: Option[Start] = None,
-          onCheck: (DataFrame, Int, Boolean, java.math.BigDecimal) => Boolean =
-            (_, _, _, _) => true): DataFrame =
+  def run(edges: DataFrame, cfg: DedupConfig = DedupConfig.default,
+          start: Option[Start] = None, edgeRows: Option[Long] = None,
+          onCheck: OnCheck = (_, _, _, _) => true): DataFrame =
+    start match {
+      case Some(s) if s.converged => s.labels
+      case _ if edgeRows.getOrElse(edges.count()) <= cfg.ccLocalMaxEdges =>
+        onDriver(edges, start, onCheck)
+      case _ => onSpark(edges, start, onCheck)
+    }
+
+  /** The loop both executors share, over their own label state `L`. ONE
+    * round per check: two per check save the Spark executor's small
+    * labelSum job every other round but confirm the fixpoint one or two
+    * rounds later (chains_ckpt, kill after round 0 then resume, 4 cores,
+    * 8 seeds: 6 rounds instead of 5 and 7.7% more op CPU). */
+  private def loop[L](labels0: L, round0: Int, round: L => L,
+                      sum: L => java.math.BigDecimal, table: L => DataFrame,
+                      onCheck: OnCheck): L = {
+    var labels = labels0
+    var r = round0
+    var prevSum = sum(labels)
+    var converged = false
+    var go = true
+    while (go && !converged && r < MaxRounds) {
+      val next = round(labels)
+      val s = sum(next)
+      converged = s.compareTo(prevSum) == 0
+      go = onCheck(table(next), r, converged, s)
+      labels = next; prevSum = s; r += 1
+    }
+    labels
+  }
+
+  /** Each round a [[step]]; the carried start is checkpointed first. */
+  private def onSpark(edges: DataFrame, start: Option[Start], onCheck: OnCheck): DataFrame =
     // tiny, regular per-round plans: see RunScope.StaticJoins
     RunScope.withConf(edges.sparkSession, RunScope.StaticJoins) {
       // previously the 25 MB sym table was re-exchanged ~4x per round (the
       // 3-way union in symmetrize has no useful partitioning); now only the
       // few-MB label table moves per round — see [[checkpointedSym]]
       val p = math.max(2, edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      // sym is only needed when rounds remain — an already-converged resume
-      // must not pay its eager repartition+sort materialization
-      lazy val sym = checkpointedSym(edges, p)
-      var labels = start.fold(initLabels(sym).localCheckpoint(true))(_.labels)
-      var round = start.fold(0)(_.round)
-      var converged = start.exists(_.converged)
-      var prevSum = if (converged) null else labelSum(labels)
-      var go = true
-      while (go && !converged && round < MaxRounds) {
-        labels = step(sym, labels)
-        val s = labelSum(labels)
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        go = onCheck(labels, round, converged, s)
-        round += 1
-      }
-      labels
+      val sym = checkpointedSym(edges, p)
+      val labels0 = start.fold(initLabels(sym))(_.labels).localCheckpoint(true)
+      loop[DataFrame](labels0, start.fold(0)(_.round), step(sym, _), labelSum, identity, onCheck)
     }
+
+  /** [[step]]'s round over arrays on the driver, for graphs the gate of
+    * [[run]] collects. Vertices are indexed in id order, so `label(v) ≤ v`
+    * and every min carry over from ids to indices. Per round, as [[step]]:
+    * each vertex takes the min label over its edges and itself, each old
+    * label (root) the min of the vertices it labels, then two jumps
+    * `label := min(label, label(label))`, each reading the table before it. */
+  private def onDriver(edges: DataFrame, start: Option[Start], onCheck: OnCheck): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val pairs = edges.select(col("a"), col("b")).as[(Long, Long)].collect()
+    val ids = (pairs.map(_._1) ++ pairs.map(_._2)).sorted.distinct
+    val n = ids.length
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    val (a, b) = pairs.map(e => (at(e._1), at(e._2))).unzip
+    def round(lab: Array[Int]): Array[Int] = {
+      val m = lab.clone()
+      for (i <- a.indices) {
+        m(a(i)) = math.min(m(a(i)), lab(b(i))); m(b(i)) = math.min(m(b(i)), lab(a(i)))
+      }
+      val hooked = m.clone()
+      for (v <- 0 until n) hooked(lab(v)) = math.min(hooked(lab(v)), m(v))
+      def jump(l: Array[Int]) = Array.tabulate(n)(v => math.min(l(v), l(l(v))))
+      jump(jump(hooked))
+    }
+    def sum(lab: Array[Int]) = new java.math.BigDecimal(
+      lab.foldLeft(BigInteger.ZERO)((s, l) => s.add(BigInteger.valueOf(ids(l)))))
+    def table(lab: Array[Int]): DataFrame =
+      spark.createDataset(Array.tabulate(n)(v => (ids(v), ids(lab(v)))).toSeq).toDF("id", "label")
+    val labels0 = Array.tabulate(n)(identity)
+    start.foreach(_.labels.select(col("id"), col("label")).as[(Long, Long)].collect()
+      .foreach { case (v, l) => labels0(at(v)) = at(l) })
+    table(loop(labels0, start.fold(0)(_.round), round, sum, table, onCheck))
+  }
 }

@@ -259,14 +259,14 @@ object DedupPipeline {
     def assignments(compute: => DataFrame): Option[DataFrame]
   }
 
-  /** The plain drivers' policy: features and edges persist for the run,
-    * CC takes [[ConnectedComponents.labels]]' driver-local shortcut on small
-    * graphs, and the assignments are checkpointed eagerly (only actions plan
-    * under the scope's shuffle clamp). */
+  /** The plain drivers' policy: features and edges persist for the run (the
+    * CC gate's count materializes the edges), and the assignments are
+    * checkpointed eagerly (only actions plan under the scope's shuffle
+    * clamp). */
   private[dedup] final case class InMemory(cfg: DedupConfig) extends Materialize {
     def features(compute: => DataFrame) = Some(RunScope.persist(compute))
     def edges(compute: => DataFrame) = Some(RunScope.persist(compute))
-    def labels(edges: DataFrame) = Some(ConnectedComponents.labels(edges, cfg))
+    def labels(edges: DataFrame) = Some(ConnectedComponents.run(edges, cfg))
     def assignments(compute: => DataFrame) = Some(compute.localCheckpoint(true))
   }
 

@@ -8,7 +8,7 @@ class SessionsSpec extends AnyFunSuite {
 
   private val singleHostKeys = Seq("spark.broadcast.compress", "spark.broadcast.blockSize",
     "spark.storage.memoryMapThreshold", "spark.locality.wait", "spark.shuffle.file.buffer",
-    "spark.shuffle.unsafe.file.output.buffer", "spark.io.compression.lz4.blockSize",
+    "spark.shuffle.localDisk.file.output.buffer", "spark.io.compression.lz4.blockSize",
     "spark.local.dir", "spark.driver.host")
 
   test("a local master gets the shared and the single-host settings") {

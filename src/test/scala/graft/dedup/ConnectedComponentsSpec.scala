@@ -1,15 +1,16 @@
 package graft.dedup
 
 import graft.SparkTest
-import graft.core.Murmur3
+import graft.core.{DedupConfig, Murmur3}
 import graft.snapshot.SnapshotLog
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The distributed CC loop against the driver-local union-find, and the
-  * round counts and plan statistics of its iterations, on graphs whose
+/** The driver and Spark executors of the CC round against each other, and
+  * the round counts and plan statistics of the iterations, on graphs whose
   * vertex ids are Murmur3 hashes (random order along every path — the
   * order the pipeline's hashed clip ids give). */
 class ConnectedComponentsSpec extends AnyFunSuite with SparkTest {
@@ -39,13 +40,36 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTest {
     }
   } yield (kind, edges)
 
-  test("distributed CC equals union-find on hashed paths, stars, trees and sparse graphs") {
+  private val sparkCfg = DedupConfig.default.copy(ccLocalMaxEdges = 0)
+
+  /** Every round's (round, converged, label sum, sorted (id, label) rows). */
+  private def rounds(edges: DataFrame, cfg: DedupConfig,
+                     start: Option[ConnectedComponents.Start] = None) = {
     import spark.implicits._
-    val prop = Prop.forAllNoShrink(graphs) { case (kind, edges) =>
+    val out = Seq.newBuilder[(Int, Boolean, java.math.BigDecimal, Seq[(Long, Long)])]
+    ConnectedComponents.run(edges, cfg, start, onCheck = { (labels, round, converged, sum) =>
+      out += ((round, converged, sum, labels.as[(Long, Long)].collect().sorted.toSeq))
+      true
+    })
+    out.result()
+  }
+
+  test("driver and Spark executors match round for round, fresh and from a carried start") {
+    import spark.implicits._
+    val prop = Prop.forAllNoShrink(graphs, Gen.choose(0, 8)) { case ((kind, edges), k) =>
       val df = edges.toDF("a", "b")
-      val dist = ConnectedComponents.run(df).as[(Long, Long)].collect().sorted.toSeq
-      val local = ConnectedComponents.runLocal(df).as[(Long, Long)].collect().sorted.toSeq
-      Prop(dist == local) :| s"$kind with ${edges.size} edges"
+      val onSpark = rounds(df, sparkCfg)
+      val fresh = rounds(df, DedupConfig.default) == onSpark && onSpark.last._2
+      // resume both from the Spark executor's round k (clamped to a
+      // round that is not yet the fixpoint)
+      val open = onSpark.filterNot(_._2)
+      val carried = open.isEmpty || {
+        val (r, _, _, rows) = open(k % open.size)
+        val start = Some(ConnectedComponents.Start(rows.toDF("id", "label"), r + 1, converged = false))
+        val s = rounds(df, sparkCfg, start)
+        s.nonEmpty && rounds(df, DedupConfig.default, start) == s
+      }
+      Prop(fresh && carried) :| s"$kind with ${edges.size} edges"
     }
     val res = Test.check(
       Test.Parameters.default.withMinSuccessfulTests(16).withInitialSeed(Seed(20261017L)), prop)
@@ -73,17 +97,19 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTest {
 
   test("checkpointed CC on a 256-vertex hashed path commits at most 12 label rounds") {
     import spark.implicits._
-    // features and edges are committed up front, so the run resumes
-    // straight into its CC rounds over exactly this path
-    val dir = tempDir("graft-cc-path")
     val ids = hashedIds(256, 11L)
     val features = ids.zipWithIndex.map { case (id, i) => (s"clip-$i", id) }.toDF("clip_id", "id")
-    SnapshotLog.commit(features, s"$dir/features", "features", Seq("input"))
-    SnapshotLog.commit(path(ids).toDF("a", "b"), s"$dir/edges", "edges", Seq("features"))
-    val assignments = CheckpointedDedup.run(features, dir).get
-    val rounds = SnapshotLog.latestVersion(s"$dir/labels").get + 1
-    assert(SnapshotLog.latestStage(s"$dir/labels").exists(_.stage == "labels_converged"))
-    assert(rounds <= 12, s"$rounds label rounds committed")
-    assert(assignments.select("cluster").distinct().as[Long].collect().toSeq == Seq(ids.min))
+    for (cfg <- Seq(DedupConfig.default, sparkCfg)) {
+      // features and edges are committed up front, so the run resumes
+      // straight into its CC rounds over exactly this path
+      val dir = tempDir("graft-cc-path")
+      SnapshotLog.commit(features, s"$dir/features", "features", Seq("input"))
+      SnapshotLog.commit(path(ids).toDF("a", "b"), s"$dir/edges", "edges", Seq("features"))
+      val assignments = CheckpointedDedup.run(features, dir, cfg).get
+      val rounds = SnapshotLog.latestVersion(s"$dir/labels").get + 1
+      assert(SnapshotLog.latestStage(s"$dir/labels").exists(_.stage == "labels_converged"))
+      assert(rounds <= 12, s"$rounds label rounds committed at ccLocalMaxEdges ${cfg.ccLocalMaxEdges}")
+      assert(assignments.select("cluster").distinct().as[Long].collect().toSeq == Seq(ids.min))
+    }
   }
 }

@@ -147,9 +147,9 @@ class DedupPipelineSpec extends AnyFunSuite with SparkTest {
       s"only $recovered/${truncIdx.size} truncation members recovered")
   }
 
-  test("driver-local union-find CC equals the distributed min-label loop") {
+  test("driver and Spark CC executors agree on a hand-built graph") {
     import spark.implicits._
-    // chain + triangle + singleton-edge + high-id star: covers merge order,
+    // chain + triangle + singleton-edge + high-id star: covers hooking,
     // transitivity, and label-min-through-intermediate cases
     val edges = Seq(
       (5L, 3L), (3L, 9L), (9L, 7L), // chain with min in the middle
@@ -157,9 +157,9 @@ class DedupPipelineSpec extends AnyFunSuite with SparkTest {
       (40L, 41L), // pair
       (100L, 50L), (100L, 60L), (100L, 70L) // star centered on a non-min id
     ).toDF("a", "b")
-    val local = ConnectedComponents.runLocal(edges)
+    val local = ConnectedComponents.run(edges, cfg)
       .as[(Long, Long)].collect().sorted.toSeq
-    val dist = ConnectedComponents.run(edges)
+    val dist = ConnectedComponents.run(edges, cfg.copy(ccLocalMaxEdges = 0))
       .as[(Long, Long)].collect().sorted.toSeq
     assert(local == dist)
     assert(local.toMap.apply(7L) == 3L) // chain contracts to the min id

@@ -14,6 +14,9 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
 
   private val n = 400
   private val cfg = DedupConfig.default
+  // every graph here is far below the default ccLocalMaxEdges: this config
+  // keeps the CC rounds on Spark
+  private val sparkCfg = cfg.copy(ccLocalMaxEdges = 0)
 
   private def clips = CorpusGen.clips(spark, n).toDF()
 
@@ -51,13 +54,35 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
   }
 
   test("kill mid-CC (after round 0), resume reproduces assignments") {
-    val dir = tmpDir("cc")
-    assert(CheckpointedDedup.run(clips, dir, cfg, stopAfter = Some("labels_round_0")).isEmpty)
-    val snap = SnapshotLog.latestStage(s"$dir/labels")
-    assert(snap.exists(_.stage == "labels_round_0"))
-    assert(assignmentsOf(dir) == uninterrupted)
-    // converged marker present after resume
-    assert(SnapshotLog.latestStage(s"$dir/labels").exists(_.stage == "labels_converged"))
+    for (c <- Seq(cfg, sparkCfg)) {
+      val dir = tmpDir("cc")
+      assert(CheckpointedDedup.run(clips, dir, c, stopAfter = Some("labels_round_0")).isEmpty)
+      val snap = SnapshotLog.latestStage(s"$dir/labels")
+      assert(snap.exists(_.stage == "labels_round_0"))
+      assert(clusterOf(CheckpointedDedup.run(clips, dir, c).get) == uninterrupted)
+      // converged marker present after resume
+      assert(SnapshotLog.latestStage(s"$dir/labels").exists(_.stage == "labels_converged"))
+    }
+  }
+
+  test("driver and Spark CC commit identical label versions and resume each other") {
+    import spark.implicits._
+    def versions(c: DedupConfig): Seq[(String, Seq[(Long, Long)])] = {
+      val dir = tmpDir("versions")
+      assert(clusterOf(CheckpointedDedup.run(clips, dir, c).get) == uninterrupted)
+      (0 to SnapshotLog.latestVersion(s"$dir/labels").get).map { v =>
+        SnapshotLog.manifest(s"$dir/labels", v).get.stage ->
+          SnapshotLog.read(spark, s"$dir/labels", v).as[(Long, Long)].collect().sorted.toSeq
+      }
+    }
+    val local = versions(cfg)
+    assert(local.size >= 2 && local.last._1 == "labels_converged")
+    assert(local == versions(sparkCfg))
+    for ((killOn, resumeOn) <- Seq((cfg, sparkCfg), (sparkCfg, cfg))) {
+      val dir = tmpDir("cross")
+      assert(CheckpointedDedup.run(clips, dir, killOn, stopAfter = Some("labels_round_0")).isEmpty)
+      assert(clusterOf(CheckpointedDedup.run(clips, dir, resumeOn).get) == uninterrupted)
+    }
   }
 
   test("killed and completed runs release every RDD they persisted") {
