@@ -53,7 +53,8 @@ import org.apache.spark.sql.functions._
   * session and every child alike. Two iteration knobs, never set by a
   * script: `-Dgraft.queryFilter=q02,d06` benches a subset of the queries,
   * `-Dgraft.queriesOnly=true` skips the ANN lanes, the dedup ladder and the
-  * calibration.
+  * calibration. Either knob still prints the JSON line but leaves
+  * `BENCH_LAST.json` alone: that file holds full runs only.
   */
 object Bench {
 
@@ -460,7 +461,12 @@ object Bench {
     // (stdout, flushed) and rewrites BENCH_LAST.json, so a timeout at ANY
     // point leaves a parseable artifact carrying every section that
     // finished, with `partial:true` marking a truncated run and
-    // `elapsed_sec` proving headroom on complete ones.
+    // `elapsed_sec` proving headroom on complete ones. A filtered or
+    // queries-only run prints its line and does not touch the file.
+    val filter = sys.props.getOrElse("graft.queryFilter", "")
+      .split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val queriesOnly = sys.props.getOrElse("graft.queriesOnly", "false").toBoolean
+    val fullRun = filter.isEmpty && !queriesOnly
     val tMain0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - tMain0) / 1e9
     var queriesTotal = 0.0
@@ -473,8 +479,9 @@ object Bench {
       val json = f"""{"metric":"total","value":${queriesTotal + ladderTotal},""" +
         f""""unit":"sec","elapsed_sec":$elapsedSec%.1f,"partial":$partial,""" +
         sections.values.mkString(",") + "}"
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LAST.json"), json + "\n")
-      catch { case _: Throwable => () }
+      if (fullRun)
+        try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LAST.json"), json + "\n")
+        catch { case _: Throwable => () }
       println(json)
       System.out.flush()
     }
@@ -496,11 +503,8 @@ object Bench {
     // interference windows make single-shot numbers untrustworthy
     // (VERDICT r2 #3); pre-staged inputs (corpus parquet, row-group-split sf
     // tables) keep generation out of the timed window.
-    val filter = sys.props.getOrElse("graft.queryFilter", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
     val benched = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => filter.isEmpty || filter.exists(n.startsWith))
-    val queriesOnly = sys.props.getOrElse("graft.queriesOnly", "false").toBoolean
     val spark0 = Sessions.create("graft-bench-queries", cores)
     // per-query summed task run time (VERDICT r4 #4: the committed r4 query
     // block was dirty-window data and nothing in the artifact said so — a

@@ -161,26 +161,18 @@ object OracleDump {
       fps(i) = graft.audio.SpectralSig.fp64(sigs(i))
       i += 1
     }
-    val root = Array.tabulate(n)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (root(r) != r) { root(r) = root(root(r)); r = root(r) }
-      r
-    }
+    val uf = new BruteForceOracle.UnionFind(n)
     i = 0
     while (i < n) {
       var j = i + 1
       while (j < n) {
-        if (graft.audio.SpectralSig.isDupPair(fps(i), fps(j), sigs(i), sigs(j))) {
-          val (ri, rj) = (find(i), find(j))
-          if (ri != rj) root(math.max(ri, rj)) = math.min(ri, rj)
-        }
+        if (graft.audio.SpectralSig.isDupPair(fps(i), fps(j), sigs(i), sigs(j))) uf.union(i, j)
         j += 1
       }
       i += 1
     }
     val ids = Array.tabulate(n)(i => CorpusGen.clipId(i.toLong))
-    val members = (0 until n).groupBy(find)
+    val members = (0 until n).groupBy(uf.find)
     val label = new Array[Long](n)
     val rep = new Array[String](n)
     members.values.foreach { idxs =>
@@ -242,25 +234,17 @@ object OracleDump {
     val rows = vectors.select("vec_id", "embedding").as[(Long, Array[Float])]
       .collect().sortBy(_._1)
     val n = rows.length
-    val root = Array.tabulate(n)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (root(r) != r) { root(r) = root(root(r)); r = root(r) }
-      r
-    }
+    val uf = new BruteForceOracle.UnionFind(n)
     var i = 0
     while (i < n) {
       var j = i + 1
       while (j < n) {
-        if (cosF(rows(i)._2, rows(j)._2) >= threshold) {
-          val (ri, rj) = (find(i), find(j))
-          if (ri != rj) root(math.max(ri, rj)) = math.min(ri, rj)
-        }
+        if (cosF(rows(i)._2, rows(j)._2) >= threshold) uf.union(i, j)
         j += 1
       }
       i += 1
     }
-    val members = (0 until n).groupBy(find)
+    val members = (0 until n).groupBy(uf.find)
     val label = new Array[Long](n)
     members.values.foreach { idxs =>
       val lbl = idxs.map(i => rows(i)._1).min

@@ -34,13 +34,20 @@ import org.apache.spark.sql.functions._
   * needs 32 independent tables for miss-all = 0.823^32 = 0.002/pair. */
 object EmbedDedup {
 
+  /** Input-row ceiling for broadcasting the embedding table to the verify
+    * joins (the [[RunScope]] join rule). At 2k vectors (sf0.1) the
+    * broadcast plan ran d10 in a median 3.28 s against 5.00 s sort-merged
+    * (10 alternating pairs, 4 cores, same answer); at 1M the broadcast
+    * build asked for 4 GB of an 8g driver heap and the run failed. */
+  final val VerifyBroadcastMaxRows = 100000L
+
   /** (vec_id, cluster, is_rep) for every input vector; singletons are their
     * own cluster. Exact predicate: cosine(a, b) >= threshold evaluated on
     * the full vectors (LSH is candidate generation only — a surviving edge
     * is never approximate). */
   def clusters(vectors: DataFrame, threshold: Double = 0.45,
                planesPerTable: Int = 4, tables: Int = 32, seed: Long = 42L,
-               cfg: DedupConfig = DedupConfig.default): DataFrame = RunScope.embedLane(vectors, cfg) { eff =>
+               cfg: DedupConfig = DedupConfig.default): DataFrame = RunScope(vectors, VerifyBroadcastMaxRows) { _ =>
     val sigCols = (0 until tables).map(t =>
       hyperplane_sig(col("embedding"), planesPerTable, seed + t))
     val sigs = vectors.select(col("vec_id"),
@@ -55,7 +62,7 @@ object EmbedDedup {
       col("vec_id").as("id"))
     val cand = CandidatePairs.pairsPacked(buckets, cfg)
 
-    val emb = if (eff.broadcastLookups) broadcast(vectors) else vectors
+    val emb = RunScope.lookup(vectors)
     val embA = emb.select(col("vec_id").as("a"), col("embedding").as("a_emb"))
     val embB = emb.select(col("vec_id").as("b"), col("embedding").as("b_emb"))
     // persisted BEFORE the gating count, mirroring DedupPipeline.run:

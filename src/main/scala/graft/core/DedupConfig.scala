@@ -6,6 +6,11 @@ package graft.core
   * config" between the pipeline and the reference (brute-force oracle)
   * implementation. Every constant that influences a signature lives here and
   * ONLY here, so pipeline and oracle cannot drift (SURVEY.md §7.4).
+  *
+  * How a run joins its verify lookups is not configured here: each run
+  * measures its input rows against its lane's ceiling
+  * ([[graft.dedup.RunScope]]), and a session turns the broadcasts off
+  * with `spark.sql.autoBroadcastJoinThreshold=-1`.
   */
 final case class DedupConfig(
     /** char k-gram length for shingling (after normalization) */
@@ -35,20 +40,6 @@ final case class DedupConfig(
     seed: Long = 42L,
     /** cap on LSH bucket size before salted overflow handling (skew guard) */
     maxBucketSize: Int = 64,
-    /** pin the verification lookup tables (slim signatures + norm texts)
-      * as the broadcast build side. Right whenever one executor can hold
-      * the corpus' norm table (bench scale, and clusters up to ~10^8
-      * medium clips with high executor memory); set false beyond that and
-      * AQE picks the sort-merge plan instead. The embedding lane
-      * ([[graft.dedup.RunScope.embedLane]]) broadcasts its embedding table
-      * under the same flag, up to its own row ceiling. */
-    broadcastLookups: Boolean = true,
-    /** row-count ceiling above which the text lane
-      * ([[graft.dedup.RunScope.textLane]]) ignores broadcastLookups=true and falls back to AQE-chosen joins —
-      * a corpus whose slim+norm lookup tables outgrow executor memory must
-      * degrade to sort-merge, not OOM the build side. ~5e6 medium clips
-      * ≈ low-GB broadcast relations; tune per deployment. */
-    broadcastLookupMaxRows: Long = 5000000L,
     /** hot-bucket detection: exact per-key counts (default — deterministic
       * under any partitioning, each bucket run counted inside the single
       * run-streaming exchange of [[graft.dedup.CandidatePairs]])

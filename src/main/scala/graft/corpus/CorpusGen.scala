@@ -288,13 +288,6 @@ object CorpusGen {
     spark.read.parquet(dir)
   }
 
-  /** Write the corpus as a snapshot table (immutable parquet + versioned
-    * manifest with per-partition lineage — FIXTURES.md §1 storage shape).
-    * Readable by plain `spark.read.parquet(dir + "/data/v0")` or
-    * [[graft.snapshot.SnapshotLog.read]]. */
-  def writeSnapshot(spark: SparkSession, n: Int, tableDir: String, seed: Long = 42L): Unit =
-    graft.snapshot.SnapshotLog.commit(clips(spark, n, seed).toDF(), tableDir, "clips_input")
-
   /** Ground-truth side table (planted clusters). */
   def truth(spark: SparkSession, n: Int, seed: Long = 42L): Dataset[TruthRow] = {
     import spark.implicits._

@@ -28,9 +28,11 @@ import org.apache.spark.sql.functions._
   *     block, and the recursive split preserves that completeness at every
   *     level — bucketing misses nothing the predicate would accept.
   *  4. Pairs join the slim (id, sig, fp) table twice (plain equi-joins on
-  *     the uniform hash id — no skew; AQE picks the strategy) and are
-  *     verified by the frozen predicate: bit_count(fp_a ^ fp_b) <=
-  *     MaxHamming AND codegen cosine(sig_a, sig_b) >= MinCosine.
+  *     the uniform hash id — no skew), through [[RunScope.lookup]]: hinted
+  *     as the broadcast build side up to [[VerifyBroadcastMaxRows]] clips,
+  *     sort-merged above it. They are verified by the frozen predicate:
+  *     bit_count(fp_a ^ fp_b) <= MaxHamming AND codegen cosine(sig_a,
+  *     sig_b) >= MinCosine.
   *  5. Steps 1 and 2–4 are this lane's features and edges in
   *     [[DedupPipeline.stages]], kept [[DedupPipeline.InMemory]]: edges
   *     cluster via [[ConnectedComponents]], assignments/representatives
@@ -74,6 +76,11 @@ object AudioDedup {
     ((1L << SpectralSig.BlockBits) - 1) << (SpectralSig.BlockBits * blockIdx)
   }
 
+  /** Input-row ceiling for broadcasting [[verifiedEdges]]' lookups (the
+    * [[RunScope]] join rule). Lower than the text lane's: each lookup row
+    * carries a 48-double spectral signature, wider than an embedding row. */
+  final val VerifyBroadcastMaxRows = 100000L
+
   /** Block buckets -> candidate pairs -> frozen-predicate verification.
     *
     * Pair generation is [[CandidatePairs.pairsHamming]]: bucket rows carry
@@ -95,8 +102,8 @@ object AudioDedup {
       .select(col("a"), col("b"))
     val slim = feats.select(col("id"), col("sig"), col("fp"))
     cand
-      .join(slim.select(col("id").as("a"), col("sig").as("sa"), col("fp").as("fa")), "a")
-      .join(slim.select(col("id").as("b"), col("sig").as("sb"), col("fp").as("fb")), "b")
+      .join(RunScope.lookup(slim.select(col("id").as("a"), col("sig").as("sa"), col("fp").as("fa"))), "a")
+      .join(RunScope.lookup(slim.select(col("id").as("b"), col("sig").as("sb"), col("fp").as("fb"))), "b")
       .where(
         bit_count(col("fa").bitwiseXOR(col("fb"))) <= lit(SpectralSig.MaxHamming) &&
           cosine_sim(col("sa"), col("sb")) >= lit(SpectralSig.MinCosine))
@@ -104,7 +111,7 @@ object AudioDedup {
   }
 
   def run(clips: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame =
-    RunScope(clips) { (_, _) =>
+    RunScope(clips, VerifyBroadcastMaxRows) { _ =>
       DedupPipeline.stages(clips, DedupPipeline.InMemory(cfg))(features(_, cfg), verifiedEdges(_, cfg))
     }.get
 }

@@ -44,7 +44,7 @@ object BruteForceOracle {
       while (j < n) {
         val dup =
           TextFeatures.hammingDistance(sim(i), sim(j)) <= cfg.hammingMax ||
-            DupPredicate.containment(norm(i), norm(j), cfg) ||
+            containment(norm(i), norm(j), cfg) ||
             TextFeatures.jaccardSorted(shingles(i), shingles(j)) >= cfg.jaccardThreshold
         if (dup) out += ((i, j))
         j += 1
@@ -52,6 +52,13 @@ object BruteForceOracle {
       i += 1
     }
     out.result()
+  }
+
+  /** Substring containment: the shorter text occurs verbatim in the longer
+    * one and has at least `cfg.minContainLen` chars. */
+  private def containment(normA: String, normB: String, cfg: DedupConfig): Boolean = {
+    val (short, long) = if (normA.length <= normB.length) (normA, normB) else (normB, normA)
+    short.length >= cfg.minContainLen && long.contains(short)
   }
 
   /** Connected-component cluster label (min member index) per document. */

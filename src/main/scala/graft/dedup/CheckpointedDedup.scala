@@ -32,20 +32,20 @@ object CheckpointedDedup {
     * hook: the run returns None once the named stage (`features`, `edges`,
     * `labels_round_<k>`, `labels_converged`, `assignments`) is committed or
     * read back; a CC that never commits that round runs to the end. Session
-    * conf and cache release follow [[RunScope.textLane]]: killed or
-    * complete, the run leaves no cache behind — the returned assignments
-    * read from their snapshot. */
+    * conf, join policy and cache release follow [[RunScope]] at the text
+    * lane's ceiling: killed or complete, the run leaves no cache behind —
+    * the returned assignments read from their snapshot. */
   def run(clips: DataFrame, workDir: String,
           cfg: DedupConfig = DedupConfig.default,
           stopAfter: Option[String] = None): Option[DataFrame] =
-    RunScope.textLane(clips, cfg) { (eff, p) =>
+    RunScope(clips, DedupPipeline.VerifyBroadcastMaxRows) { p =>
       val done = s"$workDir/assignments"
       // a fully completed workDir is a pure read: skip straight to the
       // committed assignments instead of re-materializing sym + labels
       if (SnapshotLog.exists(done)) Some(SnapshotLog.read(clips.sparkSession, done))
-      else DedupPipeline.stages(clips, new Committed(clips.sparkSession, workDir, p, eff, stopAfter))(
-        DedupPipeline.features(_, eff),
-        f => DedupPipeline.verifiedEdges(f, DedupPipeline.candidates(f, eff), eff))
+      else DedupPipeline.stages(clips, new Committed(clips.sparkSession, workDir, p, cfg, stopAfter))(
+        DedupPipeline.features(_, cfg),
+        f => DedupPipeline.verifiedEdges(f, DedupPipeline.candidates(f, cfg), cfg))
     }
 
   private final class Committed(spark: SparkSession, workDir: String, p: Int, cfg: DedupConfig,

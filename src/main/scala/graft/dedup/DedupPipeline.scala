@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *           winnow fingerprints; one pass, persisted)
   *         ─ three candidate lanes (MinHash-LSH ∪ SimHash-blocks ∪
   *           winnowing) through skew-aware [[CandidatePairs]]
-  *         ─ exact verification with the shared [[DupPredicate]]
-  *           (no false-positive pairs can survive)
+  *         ─ exact verification of the frozen predicate's three clauses
+  *           ([[verifiedEdges]]: no false-positive pairs can survive)
   *         ─ [[ConnectedComponents]] min-label clustering
   *         ─ assignments + canonical representative per cluster.
   */
@@ -84,6 +84,12 @@ object DedupPipeline {
     CandidatePairs.pairsPacked(packed, cfg)
   }
 
+  /** Input-row ceiling for broadcasting [[verifiedEdges]]' lookups (the
+    * [[RunScope]] join rule): a corpus whose slim+norm lookup tables
+    * outgrow executor memory must degrade to sort-merge, not OOM the build
+    * side. ~5e6 medium clips ≈ low-GB broadcast relations. */
+  final val VerifyBroadcastMaxRows = 5000000L
+
   /** Exact verification of candidate pairs. Each predicate clause is
     * evaluated only for the pairs whose lane can have produced it (lane
     * provenance bits from [[candidates]]):
@@ -107,15 +113,15 @@ object DedupPipeline {
     // narrow lookups: the pair stream never carries the wide features
     // columns (at 160k clips that exchange was 667 MB, the pipeline's
     // largest data motion). They are pruned projections off the columnar
-    // features cache, not caches of their own: with cfg.broadcastLookups
+    // features cache, not caches of their own: with RunScope.lookup
     // pinning the build side, dedicated caches cost 300+ MB plus their build
     // scans and bought nothing.
     val slimT = features.select(col("id"), col("simhash"), col("nsh"), col("nlen"))
     val norms = features.select(col("id"), col("norm"))
     // slim lookups use the same one-exchange aliased-self-join shape as the
     // norm lookups below (ReuseExchange builds the relation once)
-    val sa0 = if (cfg.broadcastLookups) broadcast(slimT.as("sa")) else slimT.as("sa")
-    val sb0 = if (cfg.broadcastLookups) broadcast(slimT.as("sb")) else slimT.as("sb")
+    val sa0 = RunScope.lookup(slimT.as("sa"))
+    val sb0 = RunScope.lookup(slimT.as("sb"))
     // verdict flags are PROJECTED before the persist: the cached table
     // carries (a, b, 3 booleans) — not the simhash/nsh/nlen columns the
     // flags were computed from (the unprojected version cached ~6x the
@@ -155,12 +161,11 @@ object DedupPipeline {
     // Spark built two ~norms-sized broadcast relations, and with the pair
     // side chosen as build side it re-broadcast pair+norm_a intermediates —
     // the serialized KeyLock waits that dominated run-vs-cpu time in the
-    // verify stage.) The hint pins norms as build side at bench scale;
-    // cfg.broadcastLookups=false drops it for corpora whose norms outgrow
-    // executor memory and lets AQE pick the sort-merge plan.
+    // verify stage.) A pinned run hints norms as the build side; above
+    // VerifyBroadcastMaxRows the hint is dropped and the joins sort-merge.
     def attachNorms(p: DataFrame): DataFrame = {
-      val na = if (cfg.broadcastLookups) broadcast(norms.as("na")) else norms.as("na")
-      val nb = if (cfg.broadcastLookups) broadcast(norms.as("nb")) else norms.as("nb")
+      val na = RunScope.lookup(norms.as("na"))
+      val nb = RunScope.lookup(norms.as("nb"))
       p.join(na, col("a") === col("na.id"))
         .join(nb, col("b") === col("nb.id"))
         .select(col("a"), col("b"),
@@ -245,10 +250,10 @@ object DedupPipeline {
     * is the min hash-id in the component; `rep_clip_id` the lexicographically
     * smallest clip_id in the cluster (deterministic canonical pick, P11).
     * The text lane through [[stages]], kept [[InMemory]]; the returned
-    * table's own checkpoint is the only cache [[RunScope.textLane]] leaves. */
+    * table's own checkpoint is the only cache its [[RunScope]] leaves. */
   def run(clips: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame =
-    RunScope.textLane(clips, cfg) { (eff, _) =>
-      stages(clips, InMemory(eff))(features(_, eff), f => verifiedEdges(f, candidates(f, eff), eff))
+    RunScope(clips, VerifyBroadcastMaxRows) { _ =>
+      stages(clips, InMemory(cfg))(features(_, cfg), f => verifiedEdges(f, candidates(f, cfg), cfg))
     }.get
 
   /** How [[stages]] keeps each stage; None stops the run after it. */

@@ -1,15 +1,15 @@
 package graft.dedup
 
-import graft.core.DedupConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.graftshim.PlanShim
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 import scala.util.DynamicVariable
 
-/** The session policy around one dedup run, shared by the four drivers
-  * (DedupPipeline.run, CheckpointedDedup.run, AudioDedup.run,
-  * EmbedDedup.clusters). It owns three decisions:
+/** The session policy around one dedup run: [[apply]] is the one scope
+  * entry of the four drivers (DedupPipeline.run, CheckpointedDedup.run,
+  * AudioDedup.run, EmbedDedup.clusters). It owns four decisions:
   *
   * Shuffle clamp: a run sizes `spark.sql.shuffle.partitions` to its INPUT,
   * max(2, min(session, rows / 2000 + 1)), not to the session. At 5k
@@ -23,6 +23,19 @@ import scala.util.DynamicVariable
   * are partitioning-independent (checksum- and oracle-gated), so the clamp
   * only changes wall time. Only actions run inside the scope plan under the
   * clamp, so DedupPipeline and AudioDedup return an eager checkpoint.
+  *
+  * Join policy, one rule for every lane: a run is PINNED when its input
+  * has at most the lane's `maxBroadcastRows` rows and the caller's session
+  * allows broadcasts at all (`spark.sql.autoBroadcastJoinThreshold` >= 0,
+  * read before the scope turns it off). A pinned run plans under
+  * [[StaticJoins]] and [[lookup]] hints the lane's verify lookups as the
+  * broadcast build side; an unpinned run plans under [[NoAutoBroadcast]]
+  * with AQE as the session has it, and its lookups sort-merge. The ceiling
+  * is a row count, not a byte budget: the 160k-clip text lookups (~94 MB
+  * of transcripts) must broadcast while 1M embeddings (~256 MB, estimated
+  * under a 256m threshold) must not — that broadcast asked for 4 GB of an
+  * 8g driver heap and failed — and no one byte figure separates the two.
+  * `--conf spark.sql.autoBroadcastJoinThreshold=-1` unpins every lane.
   *
   * Session scoping: a run overrides session-global conf keys for its
   * duration and puts each back to its previous value (or unsets it) on
@@ -39,6 +52,7 @@ import scala.util.DynamicVariable
 object RunScope {
 
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val AutoBroadcast = "spark.sql.autoBroadcastJoinThreshold"
 
   /** Every broadcast a dedup plan WANTS is an explicit broadcast() hint
     * (hints ignore this threshold); what the auto threshold adds is
@@ -48,7 +62,7 @@ object RunScope {
     * (measured at 160k clips: 8 extra jobs per run, each re-reading ~122 MB
     * of lineage, parUse 0.76→0.86 once removed); at production scale it is
     * O(vertices) and could never be broadcast anyway — an OOM. */
-  private val NoAutoBroadcast = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+  private val NoAutoBroadcast = Map(AutoBroadcast -> "-1")
 
   /** Static join planning: AQE off and no auto-broadcast. Once every join
     * strategy is decided at plan time (broadcast-pinned lookups, the CC
@@ -61,7 +75,12 @@ object RunScope {
     * scheduling latency, where static planning runs each round as ONE job. */
   val StaticJoins: Map[String, String] = NoAutoBroadcast + ("spark.sql.adaptive.enabled" -> "false")
 
-  private val scoped = new DynamicVariable[ArrayBuffer[DataFrame]](null)
+  /** The enclosing run's state: what it persisted, and its join decision. */
+  private final class Scope(val pinned: Boolean) {
+    val persisted = ArrayBuffer.empty[DataFrame]
+  }
+
+  private val scoped = new DynamicVariable[Scope](null)
 
   /** `df.persist(MEMORY_AND_DISK)`, released when the enclosing scope exits.
     * A Dataset cache is an entry in the session's CacheManager as well as an
@@ -69,9 +88,20 @@ object RunScope {
     * plan matches it is served the emptied cache and never caches again.
     * Outside a scope this is a plain persist. */
   def persist(df: DataFrame): DataFrame = {
-    Option(scoped.value).foreach(_ += df)
+    Option(scoped.value).foreach(_.persisted += df)
     df.persist(StorageLevel.MEMORY_AND_DISK)
   }
+
+  /** A verify lookup table: the broadcast build side in a pinned run, a
+    * plain join side otherwise. Outside a scope this is `df`. */
+  def lookup(df: DataFrame): DataFrame =
+    if (Option(scoped.value).exists(_.pinned)) broadcast(df) else df
+
+  /** The join rule: broadcast the lookups of a `rows`-row run iff the
+    * session allows broadcasts (`autoBroadcastBytes` >= 0) and the run is
+    * within the lane's ceiling. */
+  def pinned(rows: Long, maxBroadcastRows: Long, autoBroadcastBytes: Long): Boolean =
+    autoBroadcastBytes >= 0 && rows <= maxBroadcastRows
 
   /** Runs `body` with each key of `conf` set, then restores each key. */
   def withConf[T](spark: SparkSession, conf: Map[String, String])(body: => T): T = {
@@ -84,66 +114,28 @@ object RunScope {
     }
   }
 
-  /** One run over `input`: counts it, runs `body(rows, partitions)` under
-    * the shuffle clamp, and releases the run's caches on every exit. */
-  def apply(input: DataFrame)(body: (Long, Int) => Option[DataFrame]): Option[DataFrame] = {
+  /** One run over `input`: counts it, decides the join policy against the
+    * lane's `maxBroadcastRows`, runs `body(partitions)` under the shuffle
+    * clamp and that policy, and releases the run's caches on every exit. */
+  def apply(input: DataFrame, maxBroadcastRows: Long)(body: Int => Option[DataFrame]): Option[DataFrame] = {
     val spark = input.sparkSession
     val sc = spark.sparkContext
     val rows = input.count()
     val p = math.max(2L, math.min(spark.conf.get(ShufflePartitions).toLong, rows / 2000L + 1L)).toInt
+    val scope = new Scope(pinned(rows, maxBroadcastRows, spark.sessionState.conf.autoBroadcastJoinThreshold))
+    val conf = (if (scope.pinned) StaticJoins else NoAutoBroadcast) + (ShufflePartitions -> p.toString)
     val before = sc.getPersistentRDDs.keySet
-    val persisted = ArrayBuffer.empty[DataFrame]
     var keep = Set.empty[Int]
     try {
-      val out = scoped.withValue(persisted) {
-        withConf(spark, Map(ShufflePartitions -> p.toString))(body(rows, p))
-      }
+      val out = scoped.withValue(scope)(withConf(spark, conf)(body(p)))
       keep = out.fold(keep)(PlanShim.checkpointRddIds)
       out
     } finally {
       // newest first: uncaching a plan re-plans the unloaded caches built on it
-      persisted.reverseIterator.foreach(_.unpersist(blocking = false))
+      scope.persisted.reverseIterator.foreach(_.unpersist(blocking = false))
       sc.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!before(id) && !keep(id)) rdd.unpersist(blocking = false)
       }
     }
   }
-
-  /** Row ceiling for broadcasting the embedding table of an embedding-lane
-    * run. At 2k vectors (sf0.1) the broadcast plan ran d10 in a median
-    * 3.28 s against 5.00 s sort-merged (10 alternating pairs, 4 cores, same
-    * answer); at 1M the auto-broadcast build asked for 4 GB of an 8g
-    * driver heap and the run failed. */
-  private val EmbedBroadcastMaxRows = 100000L
-
-  /** An embedding-lane run (EmbedDedup.clusters): [[apply]] under
-    * [[NoAutoBroadcast]]. `body` gets the effective config: broadcastLookups
-    * stays on only up to [[EmbedBroadcastMaxRows]] vectors, where the lane
-    * broadcasts its embedding table by hint; above it the joins sort-merge. */
-  def embedLane(vectors: DataFrame, cfg: DedupConfig)(
-      body: DedupConfig => Option[DataFrame]): Option[DataFrame] =
-    apply(vectors) { (rows, _) =>
-      val eff =
-        if (cfg.broadcastLookups && rows > EmbedBroadcastMaxRows) cfg.copy(broadcastLookups = false)
-        else cfg
-      withConf(vectors.sparkSession, NoAutoBroadcast)(body(eff))
-    }
-
-  /** A text-lane run (DedupPipeline.run, CheckpointedDedup.run): [[apply]]
-    * plus the join policy. Broadcast-pinned verification lookups are only
-    * safe while one executor can hold the corpus' slim+norm tables, so above
-    * `broadcastLookupMaxRows` the pin falls back to AQE-chosen joins — the
-    * default must degrade gracefully to sort-merge, not OOM the build side.
-    * While pinned the run plans under [[StaticJoins]]; above the ceiling
-    * AQE stays ON, where its runtime skew-join splitting is worth the
-    * latency, and only auto-broadcast is off. `body` gets the effective
-    * config and the clamped partition count. */
-  def textLane(clips: DataFrame, cfg: DedupConfig)(
-      body: (DedupConfig, Int) => Option[DataFrame]): Option[DataFrame] =
-    apply(clips) { (rows, p) =>
-      val eff =
-        if (cfg.broadcastLookups && rows > cfg.broadcastLookupMaxRows) cfg.copy(broadcastLookups = false)
-        else cfg
-      withConf(clips.sparkSession, if (eff.broadcastLookups) StaticJoins else NoAutoBroadcast)(body(eff, p))
-    }
 }

@@ -156,38 +156,6 @@ object GraftFunctions {
     override def prettyName: String = "graft_jaccard_shingles"
   }
 
-  /** is_dup_pair(normA, normB, simA, simB): THE near-duplicate predicate —
-    * shared verbatim with the brute-force oracle (DupPredicate). */
-  case class IsDupPair(first: Expression, second: Expression,
-                       third: Expression, fourth: Expression)
-      extends QuaternaryExpression with CodegenFallback {
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(a: Any, b: Any, sa: Any, sb: Any): Any =
-      graft.dedup.DupPredicate.isDup(
-        a.asInstanceOf[UTF8String].toString, b.asInstanceOf[UTF8String].toString,
-        sa.asInstanceOf[Long], sb.asInstanceOf[Long], cfg)
-    override protected def withNewChildrenInternal(
-        a: Expression, b: Expression, c: Expression, d: Expression): IsDupPair =
-      copy(a, b, c, d)
-    override def prettyName: String = "graft_is_dup_pair"
-  }
-
-  /** is_dup_fast(normA, normB, simA, simB): Hamming + Jaccard clauses only
-    * (the containment clause runs in the suffix-array pass). */
-  case class IsDupFast(first: Expression, second: Expression,
-                       third: Expression, fourth: Expression)
-      extends QuaternaryExpression with CodegenFallback {
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(a: Any, b: Any, sa: Any, sb: Any): Any =
-      graft.dedup.DupPredicate.isDupFast(
-        a.asInstanceOf[UTF8String].toString, b.asInstanceOf[UTF8String].toString,
-        sa.asInstanceOf[Long], sb.asInstanceOf[Long], cfg)
-    override protected def withNewChildrenInternal(
-        a: Expression, b: Expression, c: Expression, d: Expression): IsDupFast =
-      copy(a, b, c, d)
-    override def prettyName: String = "graft_is_dup_fast"
-  }
-
   /** hash_id(s): stable 64-bit id of a string key (raw, no normalization).
     * At 10^12-row scale a 64-bit id has non-trivial birthday collision mass;
     * production would widen to 128-bit (two columns) — the hash itself
@@ -288,37 +256,6 @@ object GraftFunctions {
     override protected def withNewChildrenInternal(l: Expression, r: Expression): AudioRms =
       copy(l, r)
     override def prettyName: String = "graft_audio_rms"
-  }
-
-  /** audio_frames(bytes, codec, srHz, frameMs): frame-sampled feature
-    * extraction — per-frame RMS over non-overlapping windows (the audio
-    * analogue of image resize/frame-sample for training pipelines). */
-  case class AudioFrames(first: Expression, second: Expression,
-                         third: Expression, fourth: Expression)
-      extends QuaternaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def nullSafeEval(bytes: Any, codec: Any, sr: Any, frameMs: Any): Any = {
-      val pcm = graft.audio.AudioCodec.decode(
-        bytes.asInstanceOf[Array[Byte]], codec.asInstanceOf[UTF8String].toString)
-      val frameLen = math.max(1, sr.asInstanceOf[Int] * frameMs.asInstanceOf[Int] / 1000)
-      val nFrames = math.max(1, pcm.length / frameLen)
-      val out = new Array[Double](nFrames)
-      var f = 0
-      while (f < nFrames) {
-        var acc = 0.0
-        var i = f * frameLen
-        val end = math.min(pcm.length, i + frameLen)
-        val n = end - i
-        while (i < end) { val v = pcm(i).toDouble; acc += v * v; i += 1 }
-        out(f) = if (n == 0) 0.0 else math.sqrt(acc / n)
-        f += 1
-      }
-      new GenericArrayData(out)
-    }
-    override protected def withNewChildrenInternal(
-        a: Expression, b: Expression, c: Expression, d: Expression): AudioFrames =
-      copy(a, b, c, d)
-    override def prettyName: String = "graft_audio_frames"
   }
 
   /** audio_snr_db(bytesA, codecA, bytesB, codecB): SNR of B's decoded PCM
@@ -571,17 +508,11 @@ object GraftFunctions {
   def winnow_fps(c: Column): Column = col(WinnowFps(ex(c)))
   def jaccard_shingles(a: Column, b: Column): Column = col(JaccardShingles(ex(a), ex(b)))
   def jaccard_ge(a: Column, b: Column): Column = col(JaccardGe(ex(a), ex(b)))
-  def is_dup_pair(a: Column, b: Column, sa: Column, sb: Column): Column =
-    col(IsDupPair(ex(a), ex(b), ex(sa), ex(sb)))
-  def is_dup_fast(a: Column, b: Column, sa: Column, sb: Column): Column =
-    col(IsDupFast(ex(a), ex(b), ex(sa), ex(sb)))
   def hash_id(c: Column): Column = col(HashId(ex(c)))
   def murmur3_pair(a: Column, b: Column): Column = col(Murmur3Pair(ex(a), ex(b)))
   def cosine_sim(a: Column, b: Column): Column = col(CosineSim(ex(a), ex(b)))
   def pcm_decode(bytes: Column, codec: Column): Column = col(PcmDecode(ex(bytes), ex(codec)))
   def audio_rms(bytes: Column, codec: Column): Column = col(AudioRms(ex(bytes), ex(codec)))
-  def audio_frames(bytes: Column, codec: Column, srHz: Column, frameMs: Column): Column =
-    col(AudioFrames(ex(bytes), ex(codec), ex(srHz), ex(frameMs)))
   def audio_snr_db(ba: Column, ca: Column, bb: Column, cb: Column): Column =
     col(AudioSnrDb(ex(ba), ex(ca), ex(bb), ex(cb)))
   def audio_spectral_sig(bytes: Column, codec: Column, srHz: Column): Column =
@@ -609,12 +540,10 @@ object GraftFunctions {
     one("graft_simhash_block_keys", es => SimHashBlockKeys(es.head))
     one("graft_winnow_fps", es => WinnowFps(es.head))
     one("graft_jaccard_shingles", es => JaccardShingles(es(0), es(1)))
-    one("graft_is_dup_pair", es => IsDupPair(es(0), es(1), es(2), es(3)))
     one("graft_hash_id", es => HashId(es.head))
     one("graft_murmur3_pair", es => Murmur3Pair(es(0), es(1)))
     one("graft_text_signatures", es => TextSignatures(es.head))
     one("graft_jaccard_ge", es => JaccardGe(es(0), es(1)))
-    one("graft_is_dup_fast", es => IsDupFast(es(0), es(1), es(2), es(3)))
     one("graft_cosine_sim", es => CosineSim(es(0), es(1)))
     one("graft_pcm_decode", es => PcmDecode(es(0), es(1)))
     one("graft_audio_rms", es => AudioRms(es(0), es(1)))

@@ -3,6 +3,7 @@ package graft.ann
 import graft.SparkTest
 import graft.core.DedupConfig
 import graft.corpus.EmbedGen
+import graft.dedup.RunScope
 import org.apache.spark.sql.graftshim.PlanShim
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -72,6 +73,19 @@ class EmbedDedupSpec extends AnyFunSuite with SparkTest {
     val b = EmbedDedup.clusters(vecs.repartition(7), threshold = 0.9)
       .as[(Long, Long, Boolean)].collect().toSet
     assert(a == b)
+  }
+
+  test("with broadcasts off the embedding joins sort-merge, same clusters") {
+    import spark.implicits._
+    def run() = EmbedDedup.clusters(vecs, threshold = threshold).as[(Long, Long, Boolean)].collect().toSet
+    val (default, pinnedPlans) = plansWith("graft_cosine_sim")(run())
+    assert(pinnedPlans.nonEmpty && pinnedPlans.forall(_.contains("BroadcastExchange")),
+      s"default run did not broadcast the embedding table:\n${pinnedPlans.mkString("\n")}")
+    val (got, plans) = plansWith("graft_cosine_sim")(RunScope.withConf(spark, NoBroadcasts)(run()))
+    assert(plans.nonEmpty, "no verify plan captured")
+    plans.foreach(plan => assert(!plan.contains("BroadcastExchange"),
+      s"verified through a broadcast with broadcasts off:\n$plan"))
+    assert(got == default)
   }
 
   test("distributed CC path releases every RDD but the returned labels") {

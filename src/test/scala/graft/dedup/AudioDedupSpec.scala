@@ -132,6 +132,21 @@ class AudioDedupSpec extends AnyFunSuite with SparkTest {
     assert(recall >= 0.99, s"planted audio-pair recall $recall")
   }
 
+  test("with broadcasts off the audio verify joins sort-merge, same clusters") {
+    val clips = CorpusGen.clips(spark, 200).toDF()
+    def run() = AudioDedup.run(clips, graft.core.DedupConfig.default)
+      .select(col("clip_id"), col("cluster")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (default, pinnedPlans) = plansWith("graft_cosine_sim")(run())
+    assert(pinnedPlans.nonEmpty && pinnedPlans.forall(_.contains("BroadcastExchange")),
+      s"default run did not broadcast its verify lookups:\n${pinnedPlans.mkString("\n")}")
+    val (got, plans) = plansWith("graft_cosine_sim")(RunScope.withConf(spark, NoBroadcasts)(run()))
+    assert(plans.nonEmpty, "no verify plan captured")
+    plans.foreach(plan => assert(!plan.contains("BroadcastExchange"),
+      s"verified through a broadcast with broadcasts off:\n$plan"))
+    assert(got == default)
+  }
+
   test("spectral expressions are SQL-registered") {
     graft.functions.GraftFunctions.register(spark)
     val clips = CorpusGen.clips(spark, 20).toDF()

@@ -4,11 +4,8 @@ import graft.SparkTest
 import graft.core.DedupConfig
 import graft.corpus.CorpusGen
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftshim.PlanShim
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** The BASELINE.json headline gate: dup-pair recall >= 0.99 of the Spark
   * pipeline vs the brute-force reference clustering at the same frozen
@@ -50,23 +47,6 @@ class DedupPipelineSpec extends AnyFunSuite with SparkTest {
   }
 
   private lazy val pipelineClusters: Array[Int] = groups(defaultAssign)
-
-  /** `body`'s result and the executed plans of its queries that verify
-    * Jaccard pairs (graft_jaccard_ge). */
-  private def verifyPlans[T](body: => T): (T, Seq[String]) = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val out = body
-      PlanShim.waitListenerBus(spark.sparkContext)
-      (out, plans.asScala.filter(_.contains("graft_jaccard_ge")).toSeq)
-    } finally spark.listenerManager.unregister(listener)
-  }
 
   test("oracle finds a non-trivial planted cluster structure") {
     val groups = oracleClusters.groupBy(identity).map(_._2.length)
@@ -118,12 +98,13 @@ class DedupPipelineSpec extends AnyFunSuite with SparkTest {
   }
 
   test("above the broadcast ceiling both text drivers verify without broadcasts, same assignments") {
-    val low = cfg.copy(broadcastLookupMaxRows = 10)
     val dir = tempDir("graft-ceiling")
     for ((driver, run) <- Seq[(String, () => DataFrame)](
-        "DedupPipeline" -> (() => DedupPipeline.run(clips, low)),
-        "CheckpointedDedup" -> (() => CheckpointedDedup.run(clips, dir, low).get))) {
-      val (assign, plans) = verifyPlans(clusterOf(run()))
+        "DedupPipeline" -> (() => DedupPipeline.run(clips, cfg)),
+        "CheckpointedDedup" -> (() => CheckpointedDedup.run(clips, dir, cfg).get))) {
+      val (assign, plans) = plansWith("graft_jaccard_ge") {
+        RunScope.withConf(spark, NoBroadcasts)(clusterOf(run()))
+      }
       assert(plans.nonEmpty, s"$driver: no verify plan captured")
       plans.foreach(plan => assert(!plan.contains("BroadcastExchange"),
         s"$driver verified through a broadcast above the ceiling:\n$plan"))
