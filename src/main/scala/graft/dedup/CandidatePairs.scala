@@ -519,6 +519,6 @@ object CandidatePairs {
     emitted.where($"a" =!= $"b")
       .groupBy($"a", $"b")
       .agg(bit_or($"lane").as("lane"),
-        sum(when($"lane" === lit(4), 1L).otherwise(0L)).as("fps_hits"))
+        sum(when($"lane" === lit(DedupPipeline.LaneFps), 1L).otherwise(0L)).as("fps_hits"))
   }
 }

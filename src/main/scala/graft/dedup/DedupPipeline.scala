@@ -43,9 +43,10 @@ object DedupPipeline {
     if (cfg.exactIds) ExactIds.repair(f) else f
   }
 
-  /** Lane bits carried on candidate pairs. */
+  /** Lane bits carried on candidate pairs (bit = 1 << the lane index that
+    * [[candidates]] packs). The SimHash-block lane's bit 2 has no name:
+    * the Hamming clause it feeds runs on every pair. */
   final val LaneBands = 1
-  final val LaneBlocks = 2
   final val LaneFps = 4
 
   /** Union of the three candidate lanes through ONE skew-aware pair-gen

@@ -1,16 +1,18 @@
 package graft.dedup
 
-/** Suffix array over a concatenated document corpus, built per partition
-  * (SURVEY.md §2.2 P6). Prefix-doubling construction, O(N log² N); substring
-  * search by binary search over suffixes, O(m log N) per query.
+/** Suffix array over one document's text (SURVEY.md §2.2 P6). Prefix-
+  * doubling construction, O(N log² N); substring search by binary search
+  * over suffixes, O(m log N) per query.
   *
   * Scale rationale: in the verify stage, one container document is checked
-  * against many contained-candidates (hot containers fan in). Building one
-  * SA over the partition's distinct container texts makes the per-candidate
-  * cost logarithmic instead of a full `indexOf` scan per pair — and the
-  * partition-local build keeps the pass shuffle-free (graft of the
-  * reference's sorted-longs binary search, memory4/Util.java:27, and its
-  * SoA layout lesson, HashMapReverseEfficientOneArray.java:13-17).
+  * against many contained-candidates (hot containers fan in).
+  * [[DedupPipeline.containmentEdges]] builds one SA per container text, and
+  * only once a run of equal containers reaches its 4th candidate, so a hot
+  * container's candidates each pay a logarithmic search instead of a full
+  * `indexOf` scan while singleton runs never pay the build. The pass stays
+  * partition-local and shuffle-free (graft of the reference's sorted-longs
+  * binary search, memory4/Util.java:27, and its SoA layout lesson,
+  * HashMapReverseEfficientOneArray.java:13-17).
   */
 final class SuffixArray private (val text: String, val sa: Array[Int]) {
 
@@ -42,31 +44,6 @@ final class SuffixArray private (val text: String, val sa: Array[Int]) {
       else lo = mid + 1
     }
     false
-  }
-
-  /** First (smallest-position) occurrence of query in the text, or -1.
-    * Binary search to the leftmost matching suffix in SA order, then min
-    * position over the contiguous run of matches. */
-  def indexOfAny(query: String): Int = {
-    if (query.isEmpty) return 0
-    var lo = 0
-    var hi = sa.length - 1
-    var found = -1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val c = cmpAt(query, mid)
-      if (c == 0) { found = mid; hi = mid - 1 } // leftmost in SA order
-      else if (c < 0) hi = mid - 1
-      else lo = mid + 1
-    }
-    if (found < 0) return -1
-    var best = Int.MaxValue
-    var i = found
-    while (i < sa.length && cmpAt(query, i) == 0) {
-      if (sa(i) < best) best = sa(i)
-      i += 1
-    }
-    best
   }
 }
 
@@ -147,77 +124,5 @@ object SuffixArray {
       else k <<= 1
     }
     new SuffixArray(text, sa)
-  }
-
-  /** A corpus of documents with separators, supporting "is doc B contained
-    * in any doc other than itself / in doc A". Separator '\\u0000' never
-    * appears in normalized text. */
-  final class Corpus(docs: Array[(Long, String)]) {
-    private val sep = '\u0000'
-    private val concat: String = {
-      val sb = new java.lang.StringBuilder()
-      docs.foreach { case (_, t) => sb.append(t).append(sep) }
-      sb.toString
-    }
-    /** doc start offsets, aligned with docs */
-    private val starts: Array[Int] = {
-      val out = new Array[Int](docs.length)
-      var pos = 0
-      var i = 0
-      while (i < docs.length) { out(i) = pos; pos += docs(i)._2.length + 1; i += 1 }
-      out
-    }
-    private val saIdx = SuffixArray.build(concat)
-
-    /** Is `query` contained in the corpus at a position inside a doc whose
-      * id differs from `selfId`? (Occurrences never span docs: queries
-      * contain no separator.) */
-    def containedElsewhere(query: String, selfId: Long): Boolean = {
-      if (query.isEmpty) return false
-      // walk all occurrences via leftmost search then linear scan in SA order
-      var lo = 0
-      var hi = saIdx.sa.length - 1
-      var left = -1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        val c = cmp(query, mid)
-        if (c == 0) { left = mid; hi = mid - 1 }
-        else if (c < 0) hi = mid - 1
-        else lo = mid + 1
-      }
-      if (left < 0) return false
-      var i = left
-      while (i < saIdx.sa.length && cmp(query, i) == 0) {
-        val pos = saIdx.sa(i)
-        val docIdx = docAt(pos)
-        if (docs(docIdx)._1 != selfId) return true
-        i += 1
-      }
-      false
-    }
-
-    @inline private def cmp(query: String, i: Int): Int = {
-      val start = saIdx.sa(i)
-      val n = concat.length
-      var k = 0
-      val m = query.length
-      while (k < m && start + k < n) {
-        val c = query.charAt(k) - concat.charAt(start + k)
-        if (c != 0) return c
-        k += 1
-      }
-      if (k == m) 0 else 1
-    }
-
-    /** Binary search the doc containing absolute position `pos`. */
-    private def docAt(pos: Int): Int = {
-      var lo = 0
-      var hi = starts.length - 1
-      while (lo < hi) {
-        val mid = (lo + hi + 1) >>> 1
-        if (starts(mid) <= pos) lo = mid else hi = mid - 1
-      }
-      lo
-    }
   }
 }

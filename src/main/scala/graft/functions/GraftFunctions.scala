@@ -5,7 +5,7 @@ import graft.text.TextFeatures
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, QuaternaryExpression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
@@ -39,43 +39,6 @@ object GraftFunctions {
 
   // ------------------------------------------------------------ expressions
 
-  /** normalize_text(s): canonical lowercase/whitespace-collapsed form. */
-  case class NormalizeText(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = StringType
-    override def nullSafeEval(v: Any): Any =
-      UTF8String.fromString(TextFeatures.normalize(v.asInstanceOf[UTF8String].toString))
-    override protected def withNewChildInternal(c: Expression): NormalizeText = copy(c)
-    override def prettyName: String = "graft_normalize_text"
-  }
-
-  /** minhash_sig(norm): K-wide MinHash signature of the shingle set. */
-  case class MinHashSig(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = {
-      val s = v.asInstanceOf[UTF8String].toString
-      val sh = TextFeatures.shingleSet(s, cfg.shingleK, cfg.seed)
-      new GenericArrayData(TextFeatures.minhashSignature(sh, cfg))
-    }
-    override protected def withNewChildInternal(c: Expression): MinHashSig = copy(c)
-    override def prettyName: String = "graft_minhash_sig"
-  }
-
-  /** lsh_band_keys(norm): the `bands` LSH bucket keys of the MinHash sig. */
-  case class LshBandKeys(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = {
-      val s = v.asInstanceOf[UTF8String].toString
-      val sh = TextFeatures.shingleSet(s, cfg.shingleK, cfg.seed)
-      val sig = TextFeatures.minhashSignature(sh, cfg)
-      new GenericArrayData(TextFeatures.bandHashes(sig, cfg))
-    }
-    override protected def withNewChildInternal(c: Expression): LshBandKeys = copy(c)
-    override def prettyName: String = "graft_lsh_band_keys"
-  }
-
   /** simhash64(norm): 64-bit token-TF SimHash. */
   case class SimHash64(child: Expression)
       extends UnaryExpression with CodegenFallback {
@@ -96,20 +59,11 @@ object GraftFunctions {
     override def prettyName: String = "graft_simhash_block_keys"
   }
 
-  /** winnow_fps(norm): winnowing fingerprints for the substring lane. */
-  case class WinnowFps(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any =
-      new GenericArrayData(TextFeatures.winnowFingerprints(v.asInstanceOf[UTF8String].toString, cfg))
-    override protected def withNewChildInternal(c: Expression): WinnowFps = copy(c)
-    override def prettyName: String = "graft_winnow_fps"
-  }
-
   /** text_signatures(raw): fused per-document signature tuple — ONE
     * normalize + one shingle pass per family feeding all three candidate
-    * lanes: struct(norm, simhash, bands, fps). The features stage projects
-    * this once instead of evaluating four expressions that each re-normalize. */
+    * lanes: struct(norm, simhash, bands, fps, nsh). The features stage
+    * projects this once instead of evaluating four expressions that each
+    * re-normalize. */
   case class TextSignatures(child: Expression)
       extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = StructType(Seq(
@@ -140,20 +94,6 @@ object GraftFunctions {
     override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardGe =
       copy(l, r)
     override def prettyName: String = "graft_jaccard_ge"
-  }
-
-  /** jaccard_shingles(normA, normB): exact char-k-gram-set Jaccard. */
-  case class JaccardShingles(left: Expression, right: Expression)
-      extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = DoubleType
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val sa = TextFeatures.shingleSet(a.asInstanceOf[UTF8String].toString, cfg.shingleK, cfg.seed)
-      val sb = TextFeatures.shingleSet(b.asInstanceOf[UTF8String].toString, cfg.shingleK, cfg.seed)
-      TextFeatures.jaccardSorted(sa, sb)
-    }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardShingles =
-      copy(l, r)
-    override def prettyName: String = "graft_jaccard_shingles"
   }
 
   /** hash_id(s): stable 64-bit id of a string key (raw, no normalization).
@@ -499,14 +439,9 @@ object GraftFunctions {
   private def col(e: Expression): Column = ColumnBridge.column(e)
   private def ex(c: Column): Expression = ColumnBridge.expression(c)
 
-  def normalize_text(c: Column): Column = col(NormalizeText(ex(c)))
   def text_signatures(c: Column): Column = col(TextSignatures(ex(c)))
-  def minhash_sig(c: Column): Column = col(MinHashSig(ex(c)))
-  def lsh_band_keys(c: Column): Column = col(LshBandKeys(ex(c)))
   def simhash64(c: Column): Column = col(SimHash64(ex(c)))
   def simhash_block_keys(c: Column): Column = col(SimHashBlockKeys(ex(c)))
-  def winnow_fps(c: Column): Column = col(WinnowFps(ex(c)))
-  def jaccard_shingles(a: Column, b: Column): Column = col(JaccardShingles(ex(a), ex(b)))
   def jaccard_ge(a: Column, b: Column): Column = col(JaccardGe(ex(a), ex(b)))
   def hash_id(c: Column): Column = col(HashId(ex(c)))
   def murmur3_pair(a: Column, b: Column): Column = col(Murmur3Pair(ex(a), ex(b)))
@@ -533,13 +468,8 @@ object GraftFunctions {
     val reg = spark.sessionState.functionRegistry
     def one(name: String, b: Seq[Expression] => Expression): Unit =
       reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    one("graft_normalize_text", es => NormalizeText(es.head))
-    one("graft_minhash_sig", es => MinHashSig(es.head))
-    one("graft_lsh_band_keys", es => LshBandKeys(es.head))
     one("graft_simhash64", es => SimHash64(es.head))
     one("graft_simhash_block_keys", es => SimHashBlockKeys(es.head))
-    one("graft_winnow_fps", es => WinnowFps(es.head))
-    one("graft_jaccard_shingles", es => JaccardShingles(es(0), es(1)))
     one("graft_hash_id", es => HashId(es.head))
     one("graft_murmur3_pair", es => Murmur3Pair(es(0), es(1)))
     one("graft_text_signatures", es => TextSignatures(es.head))

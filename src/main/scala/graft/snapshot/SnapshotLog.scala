@@ -105,7 +105,11 @@ object SnapshotLog {
 
   // ------------------------------------------------------------------ json
 
-  private def q(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal of `s`: escapes backslash, quote and ALL control
+    * chars (< 0x20). Verify writes oracle_sql.json with it too: a raw tab
+    * or CR in a query's SQL would make `json.load` in the oracle compare
+    * tools fail, and no query would be checked. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
@@ -115,9 +119,9 @@ object SnapshotLog {
   private def writeManifest(tableDir: String, s: Snapshot): Unit = {
     Files.createDirectories(metaDir(tableDir))
     val json =
-      s"""{"version":${s.version},"stage":${q(s.stage)},"rows":${s.rows},
+      s"""{"version":${s.version},"stage":${jsonString(s.stage)},"rows":${s.rows},
          |"committed_at_ms":${System.currentTimeMillis()},
-         |"parents":[${s.parents.map(q).mkString(",")}],
+         |"parents":[${s.parents.map(jsonString).mkString(",")}],
          |"part_rows":[${s.partRows.mkString(",")}]}""".stripMargin.replace("\n", "")
     Files.writeString(metaDir(tableDir).resolve(s"v${s.version}.json"), json)
     // atomic latest flip: write temp then move

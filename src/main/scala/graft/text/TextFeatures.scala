@@ -338,18 +338,6 @@ object TextFeatures {
     inter.toDouble / (a.length + b.length - inter)
   }
 
-  /** One-sided containment |A ∩ B| / |B| for sorted arrays. */
-  def containmentSorted(a: Array[Long], b: Array[Long]): Double = {
-    if (b.isEmpty) return 0.0
-    var i = 0; var j = 0; var inter = 0
-    while (i < a.length && j < b.length) {
-      if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
-      else if (a(i) < b(j)) i += 1
-      else j += 1
-    }
-    inter.toDouble / b.length
-  }
-
   @inline def hammingDistance(a: Long, b: Long): Int =
     java.lang.Long.bitCount(a ^ b)
 

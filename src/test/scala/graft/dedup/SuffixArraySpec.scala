@@ -34,29 +34,6 @@ class SuffixArraySpec extends AnyFunSuite {
     }
   }
 
-  test("indexOfAny returns the leftmost occurrence") {
-    val t = "banana bandana banana"
-    val sa = SuffixArray.build(t)
-    assert(sa.indexOfAny("banana") == 0)
-    assert(sa.indexOfAny("bandana") == 7)
-    assert(sa.indexOfAny("ana") == 1)
-    assert(sa.indexOfAny("zzz") == -1)
-  }
-
-  test("corpus: containedElsewhere respects doc boundaries and self-exclusion") {
-    val docs = Array(
-      (1L, "the quick brown fox"),
-      (2L, "quick brown"),
-      (3L, "fox the quick"),
-      (4L, "zzz yyy"))
-    val corpus = new SuffixArray.Corpus(docs)
-    assert(corpus.containedElsewhere("quick brown", 2L)) // in doc 1
-    assert(!corpus.containedElsewhere("zzz yyy", 4L)) // only in itself
-    assert(!corpus.containedElsewhere("brown fox the", 99L)) // spans docs 1|3 — must NOT match
-    assert(corpus.containedElsewhere("the quick", 1L)) // in doc 3
-    assert(!corpus.containedElsewhere("absent", 1L))
-  }
-
   test("empty and degenerate inputs") {
     assert(SuffixArray.build("").sa.isEmpty)
     assert(SuffixArray.build("a").contains("a"))

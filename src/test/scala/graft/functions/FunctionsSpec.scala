@@ -5,6 +5,8 @@ import graft.core.Rng
 import graft.corpus.CorpusGen
 import graft.functions.GraftFunctions._
 import graft.functions.SketchAggregates._
+import graft.text.TextFeatures
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -128,16 +130,76 @@ class FunctionsSpec extends AnyFunSuite with SparkTest {
   test("SQL registration: graft functions callable from spark.sql") {
     import spark.implicits._
     GraftFunctions.register(spark)
-    Seq((1L, "The  Quick   Brown Fox")).toDF("id", "t").createOrReplaceTempView("sqlreg")
-    val row = spark.sql(
-      """SELECT graft_normalize_text(t) AS norm,
-        |       graft_simhash64(graft_normalize_text(t)) AS sim,
+    val cfg = graft.core.DedupConfig.default
+    val texts = Seq(
+      "The  Quick   Brown Fox",
+      "the cat and the dog in the house for the win, the end",
+      "A\tlonger  transcript: it repeats, it repeats, it repeats itself " * 3)
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
+      .createOrReplaceTempView("sqlreg")
+    CorpusGen.clips(spark, 6).toDF().createOrReplaceTempView("sqlreg_clips")
+    val textSql =
+      """SELECT t, graft_text_signatures(t) AS sig,
+        |       graft_text_signatures(t).norm AS norm,
+        |       graft_simhash64(graft_text_signatures(t).norm) AS sim,
+        |       graft_simhash_block_keys(graft_text_signatures(t).simhash) AS blocks,
+        |       size(graft_text_signatures(t).bands) AS nbands,
+        |       graft_jaccard_ge(graft_text_signatures(t).norm, graft_text_signatures(t).norm) AS jac,
         |       graft_lang_id(t) AS lang,
+        |       graft_quality_score(t) AS q,
         |       graft_doc_fingerprint(t) AS fp,
-        |       size(graft_minhash_sig(graft_normalize_text(t))) AS k
-        |FROM sqlreg""".stripMargin).collect()(0)
-    assert(row.getString(0) == "the quick brown fox")
-    assert(row.getInt(4) == graft.core.DedupConfig.default.numHashes)
+        |       graft_hash_id(t) AS hid,
+        |       graft_murmur3_pair(id, 7L) AS salt
+        |FROM sqlreg ORDER BY id""".stripMargin
+    val audioSql =
+      """SELECT size(graft_pcm_decode(bytes, codec)) AS n_samples,
+        |       CAST(sr_hz AS BIGINT) * dur_ms DIV 1000 AS expected_samples,
+        |       graft_audio_rms(bytes, codec) AS rms,
+        |       graft_audio_snr_db(bytes, codec, bytes, codec) AS snr,
+        |       graft_cosine_sim(graft_audio_spectral_sig(bytes, codec, sr_hz),
+        |                        graft_audio_spectral_sig(bytes, codec, sr_hz)) AS self_cos,
+        |       graft_spectral_fp(graft_audio_spectral_sig(bytes, codec, sr_hz)) AS sfp
+        |FROM sqlreg_clips""".stripMargin
+
+    // every registered graft_* name is called above, and nothing else is
+    // registered: a function added to `register` without a call here fails
+    val called = "graft_\\w+(?=\\()".r.findAllIn(textSql + audioSql).toSet
+    val registered = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(registered == called)
+
+    val rows = spark.sql(textSql).collect()
+    assert(rows.length == texts.length)
+    assert(rows(0).getAs[String]("norm") == "the quick brown fox")
+    def longs(r: Row, field: String): Seq[Long] = r.getSeq[Long](r.fieldIndex(field)).toSeq
+    rows.zip(texts).foreach { case (r, t) =>
+      assert(r.getAs[String]("t") == t)
+      // the pipeline reads these fields by name off the fused struct
+      val (norm, sim, bands, fps, nsh) = TextFeatures.signatures(t, cfg)
+      val sig = r.getAs[Row]("sig")
+      assert(sig.getAs[String]("norm") == norm)
+      assert(sig.getAs[Long]("simhash") == sim)
+      assert(longs(sig, "bands") == bands.toSeq)
+      assert(longs(sig, "fps") == fps.toSeq)
+      assert(sig.getAs[Int]("nsh") == nsh)
+      assert(r.getAs[Long]("sim") == sim)
+      assert(longs(r, "blocks") == TextFeatures.simhashBlockKeys(sim, cfg).toSeq)
+      assert(r.getAs[Int]("nbands") == cfg.bands)
+      assert(r.getAs[Boolean]("jac"))
+      assert(r.getAs[String]("lang") == TextFeatures.languageId(t))
+      assert(r.getAs[Double]("q") == TextFeatures.qualityScore(t))
+      assert(r.getAs[Long]("fp") == TextFeatures.docFingerprint(t, cfg.seed))
+    }
+    assert(rows.map(_.getAs[Long]("hid")).distinct.length == texts.length)
+    assert(rows.map(_.getAs[Long]("salt")).distinct.length == texts.length)
+
+    spark.sql(audioSql).collect().foreach { r =>
+      assert(r.getAs[Int]("n_samples") == r.getAs[Long]("expected_samples"))
+      assert(r.getAs[Double]("rms") > 100.0, "audible signal expected")
+      val snr = r.getAs[Double]("snr")
+      assert(snr > 1000 || snr.isPosInfinity)
+      assert(math.abs(r.getAs[Double]("self_cos") - 1.0) < 1e-6)
+    }
   }
 
   test("lang_id / quality_score / doc_fingerprint as columns") {

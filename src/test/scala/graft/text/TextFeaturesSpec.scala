@@ -106,7 +106,6 @@ class TextFeaturesSpec extends AnyFunSuite {
     val a = Array(1L, 2L, 3L, 4L)
     val b = Array(3L, 4L, 5L, 6L)
     assert(TextFeatures.jaccardSorted(a, b) == 2.0 / 6.0)
-    assert(TextFeatures.containmentSorted(a, b) == 0.5)
     assert(TextFeatures.jaccardSorted(a, a) == 1.0)
     assert(TextFeatures.jaccardSorted(Array.empty[Long], Array.empty[Long]) == 1.0)
     assert(TextFeatures.jaccardSorted(a, Array.empty[Long]) == 0.0)
