@@ -38,22 +38,19 @@ object OracleDump {
   private def write(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
-  /** Components of the brute-force oracle over `keys` (cluster-key strings)
-    * and their texts: per index -> (clusterLabel = min hashId of member key,
-    * repKey = lexicographically smallest member key). */
-  private def oracleComponents(keys: Array[String], texts: Array[String])
-      : (Array[Long], Array[String]) = {
-    val roots = BruteForceOracle.clusters(texts, cfg)
-    val members = roots.indices.groupBy(roots(_))
-    val label = new Array[Long](keys.length)
-    val rep = new Array[String](keys.length)
-    members.values.foreach { idxs =>
-      val lbl = idxs.map(i => hashId(keys(i))).min
-      val r = idxs.map(keys(_)).min
-      idxs.foreach { i => label(i) = lbl; rep(i) = r }
-    }
-    (label, rep)
+  /** Per index, the minimum of `value` over the index's component (`roots`
+    * from [[BruteForceOracle.components]]). */
+  private def componentMin[T: Ordering](roots: Array[Int], value: Int => T): IndexedSeq[T] = {
+    val mins = roots.indices.groupMapReduce(roots(_))(value)(Ordering[T].min)
+    roots.indices.map(i => mins(roots(i)))
   }
+
+  /** Oracle components over `keys` (cluster-key strings): per index ->
+    * (clusterLabel = min hashId of member key, repKey = lexicographically
+    * smallest member key). */
+  private def oracleComponents(keys: Array[String], roots: Array[Int])
+      : (IndexedSeq[Long], IndexedSeq[String]) =
+    (componentMin(roots, i => hashId(keys(i))), componentMin(roots, keys(_)))
 
   /** Expected p01 output: (clip_id, cluster, rep_clip_id, is_rep) for the
     * n-clip deterministic corpus, from the brute-force oracle. */
@@ -63,7 +60,8 @@ object OracleDump {
     val pl = CorpusGen.plan(n, cfg.seed)
     val specs = (0 until n).map(i => CorpusGen.clipSpec(cfg.seed, i.toLong, pl))
     val ids = Array.tabulate(n)(i => CorpusGen.clipId(i.toLong))
-    val (label, rep) = oracleComponents(ids, specs.map(_.transcript).toArray)
+    val (label, rep) = oracleComponents(ids,
+      BruteForceOracle.clusters(specs.map(_.transcript).toArray, cfg))
     val rows = (0 until n).map(i => (ids(i), label(i), rep(i), ids(i) == rep(i)))
     write(rows.toDF("clip_id", "cluster", "rep_clip_id", "is_rep"), path)
   }
@@ -76,7 +74,8 @@ object OracleDump {
     val pl = CorpusGen.plan(n, cfg.seed)
     val specs = (0 until n).map(i => CorpusGen.clipSpec(cfg.seed, i.toLong, pl))
     val ids = Array.tabulate(n)(i => CorpusGen.clipId(i.toLong))
-    val (_, rep) = oracleComponents(ids, specs.map(_.transcript).toArray)
+    val (_, rep) = oracleComponents(ids,
+      BruteForceOracle.clusters(specs.map(_.transcript).toArray, cfg))
     val rows = (0 until n).filter(i => ids(i) == rep(i)).map { i =>
       val s = specs(i)
       (ids(i), s.params.srHz, s.params.durMs, s.codec)
@@ -124,7 +123,7 @@ object OracleDump {
     val collected = docs.select("doc_id", "text").as[(Long, String)]
       .collect().sortBy(_._1)
     val keys = collected.map(_._1.toString)
-    val (label, rep) = oracleComponents(keys, collected.map(_._2))
+    val (label, rep) = oracleComponents(keys, BruteForceOracle.clusters(collected.map(_._2), cfg))
     val rows = collected.indices.map { i =>
       (collected(i)._1, label(i), keys(i) == rep(i))
     }
@@ -161,25 +160,10 @@ object OracleDump {
       fps(i) = graft.audio.SpectralSig.fp64(sigs(i))
       i += 1
     }
-    val uf = new BruteForceOracle.UnionFind(n)
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        if (graft.audio.SpectralSig.isDupPair(fps(i), fps(j), sigs(i), sigs(j))) uf.union(i, j)
-        j += 1
-      }
-      i += 1
-    }
+    val roots = BruteForceOracle.components(n)((i, j) =>
+      graft.audio.SpectralSig.isDupPair(fps(i), fps(j), sigs(i), sigs(j)))
     val ids = Array.tabulate(n)(i => CorpusGen.clipId(i.toLong))
-    val members = (0 until n).groupBy(uf.find)
-    val label = new Array[Long](n)
-    val rep = new Array[String](n)
-    members.values.foreach { idxs =>
-      val lbl = idxs.map(i => hashId(ids(i))).min
-      val r = idxs.map(ids(_)).min
-      idxs.foreach { i => label(i) = lbl; rep(i) = r }
-    }
+    val (label, rep) = oracleComponents(ids, roots)
     (0 until n).map(i => (ids(i), label(i), ids(i) == rep(i)))
   }
 
@@ -233,24 +217,10 @@ object OracleDump {
     import spark.implicits._
     val rows = vectors.select("vec_id", "embedding").as[(Long, Array[Float])]
       .collect().sortBy(_._1)
-    val n = rows.length
-    val uf = new BruteForceOracle.UnionFind(n)
-    var i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        if (cosF(rows(i)._2, rows(j)._2) >= threshold) uf.union(i, j)
-        j += 1
-      }
-      i += 1
-    }
-    val members = (0 until n).groupBy(uf.find)
-    val label = new Array[Long](n)
-    members.values.foreach { idxs =>
-      val lbl = idxs.map(i => rows(i)._1).min
-      idxs.foreach(i => label(i) = lbl)
-    }
-    val out = (0 until n).map(i => (rows(i)._1, label(i), rows(i)._1 == label(i)))
+    val roots = BruteForceOracle.components(rows.length)((i, j) =>
+      cosF(rows(i)._2, rows(j)._2) >= threshold)
+    val label = componentMin(roots, rows(_)._1)
+    val out = rows.indices.map(i => (rows(i)._1, label(i), rows(i)._1 == label(i)))
     write(out.toDF("vec_id", "cluster", "is_rep"), path)
   }
 }

@@ -52,12 +52,51 @@ object SparkEntry {
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       q.stop()
-    } finally {
-      try java.nio.file.Files.walk(ckpt)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      catch { case _: Throwable => () }
-    }
+    } finally scala.util.Try(deleteTree(ckpt))
+  }
+
+  /** Deletes `root` and everything under it, if it exists. */
+  private def deleteTree(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root))
+      scala.util.Using.resource(java.nio.file.Files.walk(root))(
+        _.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => java.nio.file.Files.deleteIfExists(p)))
+
+  /** A directory holding a copy of `$d/events.parquet` for a file-stream
+    * source (which lists a directory; the sf table is a single file). It is
+    * keyed by `name` and by the source's canonical path hashed with `seed`,
+    * so a copy is staged once per source and reused, and a Verify against a
+    * different sf dir never reads a stale copy. */
+  private def stageEvents(d: String, name: String, seed: Long): java.nio.file.Path = {
+    val srcTag = java.lang.Long.toHexString(
+      graft.core.Murmur3.hashString(new java.io.File(d).getCanonicalPath, seed))
+    val streamDir = java.nio.file.Paths.get(s"${OracleDump.dir}/${name}_events_src_$srcTag")
+    java.nio.file.Files.createDirectories(streamDir)
+    val target = streamDir.resolve("events.parquet")
+    if (!java.nio.file.Files.exists(target))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$d/events.parquet"), target)
+    streamDir
+  }
+
+  /** e02/e04's cross-verified recall contract, run only under Verify
+    * (benchmarks time the ANN search itself): the approximate top-k is
+    * persisted under `name`; BOTH engines then independently compute the
+    * exact top-3 of `queries` over `vecs` and measure the persisted
+    * result's recall against it (+ the >= 0.8 floor as a column), so the
+    * reported recall is cross-verified by DuckDB, not self-asserted. */
+  private def recallChecked(s: SparkSession, topK: DataFrame, queries: DataFrame,
+                            vecs: DataFrame, name: String): DataFrame = {
+    import s.implicits._
+    if (!OracleDump.enabled) return topK.orderBy(col("vec_id"), col("rank"))
+    topK.coalesce(1).write.mode("overwrite").parquet(s"${OracleDump.dir}/$name")
+    val exact = Ann.bruteForceTopK(queries, vecs, 3)
+      .select(col("vec_id"), col("neighbor_id"))
+    val got = s.read.parquet(s"${OracleDump.dir}/$name")
+    val nExact = exact.count()
+    val nHits = exact.join(got, Seq("vec_id", "neighbor_id"), "left_semi").count()
+    val recallBp = math.floor(10000.0 * nHits / nExact).toLong
+    Seq((nExact, nHits, recallBp, recallBp >= 8000L))
+      .toDF("n_exact", "n_hits", "recall_bp", "meets_floor")
   }
 
   /** Flagship: the near-dup clustering pipeline on a 500-clip deterministic
@@ -405,12 +444,8 @@ object SparkEntry {
         .orderBy(col("vec_id"), col("rank"))
     }),
     "e02_knn_lsh" -> ((s, d) => {
-      // driver-checked recall contract: the LSH top-k output is persisted;
-      // BOTH engines then independently compute exact top-3 and measure the
-      // LSH result's recall against it (+ the >=0.8 floor as a column), so
-      // the reported recall is cross-verified by DuckDB, not self-asserted.
-      // (AnnSpec additionally enforces the floor in sbt.)
-      import s.implicits._
+      // driver-checked recall contract (recallChecked); AnnSpec
+      // additionally enforces the floor in sbt
       val vecs = t(s, d, "embeddings")
       // LSH parameters are GEOMETRY-driven: this table's exact top-3 sit at
       // cosine ~0.34 (unclustered — measured), so hitting the recall floor
@@ -421,28 +456,11 @@ object SparkEntry {
       // 1M vectors in the bench's ANN block.
       val lshTopK = Ann.lshTopK(vecs, 3, planesPerTable = 4, tables = 16)
         .select(col("vec_id"), col("neighbor_id"), col("rank"))
-      // the exact-recall contract (persist + brute-force cross join) runs
-      // only under Verify — benchmarks time the ANN search itself
-      if (!OracleDump.enabled) lshTopK.orderBy(col("vec_id"), col("rank"))
-      else {
-        lshTopK
-          .coalesce(1).write.mode("overwrite").parquet(s"${OracleDump.dir}/e02_lsh")
-        val exact = Ann.bruteForceTopK(vecs, vecs, 3)
-          .select(col("vec_id"), col("neighbor_id"))
-        val lsh = s.read.parquet(s"${OracleDump.dir}/e02_lsh")
-        val nExact = exact.count()
-        val nHits = exact.join(lsh, Seq("vec_id", "neighbor_id"), "left_semi").count()
-        val recallBp = math.floor(10000.0 * nHits / nExact).toLong
-        Seq((nExact, nHits, recallBp, recallBp >= 8000L))
-          .toDF("n_exact", "n_hits", "recall_bp", "meets_floor")
-      }
+      recallChecked(s, lshTopK, vecs, vecs, "e02_lsh")
     }),
     "e04_knn_ivf" -> ((s, d) => {
       // IVF cell-probe ANN with the same cross-verified recall contract as
-      // e02: the IVF top-k is persisted, then BOTH engines compute exact
-      // top-3 and measure recall of the persisted result against it.
-      // Queries probe nprobe/nlist = 1/4 of the cells.
-      import s.implicits._
+      // e02 (recallChecked).
       val vecs = t(s, d, "embeddings")
       val queries = vecs.where(col("vec_id") % 10 === 0)
       // nprobe/nlist = 5/8 of the cells: like e02, this table's neighbors
@@ -451,19 +469,7 @@ object SparkEntry {
       // (3% of cells) at recall 1.0 — measured at 1M vectors in the bench.
       val ivfTopK = Ann.ivfTopK(queries, vecs, 3, nlist = 32, nprobe = 20)
         .select(col("vec_id"), col("neighbor_id"), col("rank"))
-      if (!OracleDump.enabled) ivfTopK.orderBy(col("vec_id"), col("rank"))
-      else {
-        ivfTopK
-          .coalesce(1).write.mode("overwrite").parquet(s"${OracleDump.dir}/e04_ivf")
-        val exact = Ann.bruteForceTopK(queries, vecs, 3)
-          .select(col("vec_id"), col("neighbor_id"))
-        val ivf = s.read.parquet(s"${OracleDump.dir}/e04_ivf")
-        val nExact = exact.count()
-        val nHits = exact.join(ivf, Seq("vec_id", "neighbor_id"), "left_semi").count()
-        val recallBp = math.floor(10000.0 * nHits / nExact).toLong
-        Seq((nExact, nHits, recallBp, recallBp >= 8000L))
-          .toDF("n_exact", "n_hits", "recall_bp", "meets_floor")
-      }
+      recallChecked(s, ivfTopK, queries, vecs, "e04_ivf")
     }),
     "e03_cosine_neardup" -> ((s, d) => {
       // embedding-cosine near-duplicate pairs (threshold on the rounded
@@ -582,12 +588,7 @@ object SparkEntry {
       val workDir = "/tmp/graft_p04_work"
       // fresh workDir per invocation: with committed snapshots left behind,
       // the "kill" would be a no-op read and nothing would be resumed
-      val root = java.nio.file.Paths.get(workDir)
-      if (java.nio.file.Files.exists(root)) {
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.delete(p))
-      }
+      deleteTree(java.nio.file.Paths.get(workDir))
       val killed = graft.dedup.CheckpointedDedup.run(
         clips, workDir, DedupConfig.default, stopAfter = Some("labels_round_0"))
       require(killed.isEmpty,
@@ -607,17 +608,7 @@ object SparkEntry {
       // emits every window (append would hold back windows the final
       // watermark never closes).
       val schema = t(s, d, "events").schema
-      // the file stream source lists a DIRECTORY; the sf table is a single
-      // parquet file, so stage a link/copy of it under a stream dir
-      // staging dir keyed by the SOURCE path: a fixed dir kept a stale copy
-      // when Verify ran against a different sf dir in the same container
-      val srcTag = java.lang.Long.toHexString(
-        graft.core.Murmur3.hashString(new java.io.File(d).getCanonicalPath, 11L))
-      val streamDir = java.nio.file.Paths.get(s"${OracleDump.dir}/s01_events_src_$srcTag")
-      java.nio.file.Files.createDirectories(streamDir)
-      val target = streamDir.resolve("events.parquet")
-      if (!java.nio.file.Files.exists(target))
-        java.nio.file.Files.copy(java.nio.file.Paths.get(s"$d/events.parquet"), target)
+      val streamDir = stageEvents(d, "s01", 11L)
       val stream = s.readStream.schema(schema).parquet(streamDir.toString)
       val agg = stream
         // watermarks require TIMESTAMP; the parquet ts is TIMESTAMP_NTZ and
@@ -646,16 +637,10 @@ object SparkEntry {
       // stays open and is naturally never emitted.
       val ev = t(s, d, "events")
       val schema = ev.schema
-      val srcTag = java.lang.Long.toHexString(
-        graft.core.Murmur3.hashString(new java.io.File(d).getCanonicalPath, 12L))
-      val streamDir = java.nio.file.Paths.get(s"${OracleDump.dir}/s02_events_src_$srcTag")
-      java.nio.file.Files.createDirectories(streamDir)
-      val target = streamDir.resolve("events.parquet")
-      if (!java.nio.file.Files.exists(target))
-        java.nio.file.Files.copy(java.nio.file.Paths.get(s"$d/events.parquet"), target)
+      val streamDir = stageEvents(d, "s02", 12L)
       val sentinelTarget = streamDir.resolve("sentinels.parquet")
       if (!java.nio.file.Files.exists(sentinelTarget)) {
-        val tmp = s"${OracleDump.dir}/s02_sentinels_tmp_$srcTag"
+        val tmp = s"${streamDir}_sentinels_tmp"
         ev.select(col("user_id")).distinct()
           .crossJoin(ev.agg(max(col("ts")).as("mx")))
           .select(lit(-1L).as("event_id"),

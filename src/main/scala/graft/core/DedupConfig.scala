@@ -38,14 +38,10 @@ final case class DedupConfig(
     winnowK: Int = 16,
     /** master seed for all hash families */
     seed: Long = 42L,
-    /** cap on LSH bucket size before salted overflow handling (skew guard) */
+    /** cap on LSH bucket size before salted overflow handling (skew guard;
+      * each bucket run is counted exactly inside the single run-streaming
+      * exchange of [[graft.dedup.CandidatePairs]]) */
     maxBucketSize: Int = 64,
-    /** hot-bucket detection: exact per-key counts (default — deterministic
-      * under any partitioning, each bucket run counted inside the single
-      * run-streaming exchange of [[graft.dedup.CandidatePairs]])
-      * vs the Misra-Gries sketch (O(k) driver bytes, the 10^12-row path,
-      * but partition-dependent near the threshold). */
-    sketchHotKeys: Boolean = false,
     /** edge-count ceiling for running the CC rounds on the driver
       * ([[graft.dedup.ConnectedComponents.run]]): at or below this the
       * verified dup graph is a few MB, collected once, and ~3 scheduler
@@ -61,19 +57,7 @@ final case class DedupConfig(
       * ~3e4-in-10^12-rows event and every oracle/checksum gate runs the
       * plain 64-bit path; turn on for corpora where a silent false merge is
       * unacceptable. */
-    exactIds: Boolean = false,
-    /** minimum winnow-lane co-emissions for a pair to enter the substring-
-      * containment verification. Winnowing guarantees >= 2 shared selected
-      * fingerprints for a shared run >= winnowWindow + winnowK - 1 +
-      * winnowWindow chars (= 79 < minContainLen), so a true containment
-      * pair co-emits >= 2 barring hot-key salt splits; corpus-wide shared
-      * boilerplate (e.g. a common prefix) co-emits a few fingerprints on
-      * MILLIONS of non-duplicate pairs, and this gate is what keeps the
-      * exact suffix-array verification off them. Only meaningful with
-      * exact hot-key counts: under sketchHotKeys the salt counts (and so
-      * co-emission) are partition-dependent and the pipeline ignores the
-      * gate (treats it as 1). */
-    minFpsHits: Int = 2
+    exactIds: Boolean = false
 ) {
   require(bands * rowsPerBand == numHashes, "bands*rowsPerBand must equal numHashes")
   require(64 % simhashBlocks == 0, "simhashBlocks must divide 64")

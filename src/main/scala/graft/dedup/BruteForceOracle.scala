@@ -9,12 +9,13 @@ import graft.text.TextFeatures
   * the pipeline takes is checked against this exhaustive evaluation of the
   * same frozen predicate.
   *
-  * Used only in tests at n <= a few thousand.
+  * Used by tests, the benchmark harness and Verify's oracle parquets
+  * ([[graft.OracleDump]]) at n <= a few thousand.
   */
 object BruteForceOracle {
 
   /** Union-find with path compression. */
-  final class UnionFind(n: Int) {
+  private final class UnionFind(n: Int) {
     private val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
       var r = x
@@ -31,27 +32,38 @@ object BruteForceOracle {
     }
   }
 
-  /** All unordered near-dup pairs (i, j), i < j, by exhaustive evaluation. */
-  def pairs(transcripts: Array[String], cfg: DedupConfig = DedupConfig.default): IndexedSeq[(Int, Int)] = {
-    val n = transcripts.length
-    val norm = transcripts.map(TextFeatures.normalize)
-    val sim = norm.map(TextFeatures.simhash64(_, cfg.seed))
-    val shingles = norm.map(TextFeatures.shingleSet(_, cfg.shingleK, cfg.seed))
-    val out = Vector.newBuilder[(Int, Int)]
+  /** Component root (min member index) of each of `n` items, where items
+    * i and j join when `dup(i, j)` holds — evaluated for every pair i < j. */
+  def components(n: Int)(dup: (Int, Int) => Boolean): Array[Int] = {
+    val uf = new UnionFind(n)
     var i = 0
     while (i < n) {
       var j = i + 1
       while (j < n) {
-        val dup =
-          TextFeatures.hammingDistance(sim(i), sim(j)) <= cfg.hammingMax ||
-            containment(norm(i), norm(j), cfg) ||
-            TextFeatures.jaccardSorted(shingles(i), shingles(j)) >= cfg.jaccardThreshold
-        if (dup) out += ((i, j))
+        if (dup(i, j)) uf.union(i, j)
         j += 1
       }
       i += 1
     }
-    out.result()
+    Array.tabulate(n)(uf.find)
+  }
+
+  /** The frozen text near-dup predicate over `transcripts`, by index. */
+  private def textDup(transcripts: Array[String], cfg: DedupConfig): (Int, Int) => Boolean = {
+    val norm = transcripts.map(TextFeatures.normalize)
+    val sim = norm.map(TextFeatures.simhash64(_, cfg.seed))
+    val shingles = norm.map(TextFeatures.shingleSet(_, cfg.shingleK, cfg.seed))
+    (i, j) =>
+      TextFeatures.hammingDistance(sim(i), sim(j)) <= cfg.hammingMax ||
+        containment(norm(i), norm(j), cfg) ||
+        TextFeatures.jaccardSorted(shingles(i), shingles(j)) >= cfg.jaccardThreshold
+  }
+
+  /** All unordered near-dup pairs (i, j), i < j, by exhaustive evaluation. */
+  def pairs(transcripts: Array[String], cfg: DedupConfig = DedupConfig.default): IndexedSeq[(Int, Int)] = {
+    val dup = textDup(transcripts, cfg)
+    val n = transcripts.length
+    for (i <- 0 until n; j <- i + 1 until n if dup(i, j)) yield (i, j)
   }
 
   /** Substring containment: the shorter text occurs verbatim in the longer
@@ -62,11 +74,8 @@ object BruteForceOracle {
   }
 
   /** Connected-component cluster label (min member index) per document. */
-  def clusters(transcripts: Array[String], cfg: DedupConfig = DedupConfig.default): Array[Int] = {
-    val uf = new UnionFind(transcripts.length)
-    pairs(transcripts, cfg).foreach { case (i, j) => uf.union(i, j) }
-    Array.tabulate(transcripts.length)(uf.find)
-  }
+  def clusters(transcripts: Array[String], cfg: DedupConfig = DedupConfig.default): Array[Int] =
+    components(transcripts.length)(textDup(transcripts, cfg))
 
   /** Dup-pair recall of `actual` cluster labels vs `expected` cluster labels:
     * of all unordered pairs co-clustered in `expected`, the fraction also

@@ -1,8 +1,7 @@
 package graft.dedup
 
 import graft.core.DedupConfig
-import graft.sketch.FreqSketch
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Bucket → candidate-pair expansion with explicit skew handling.
@@ -12,17 +11,15 @@ import org.apache.spark.sql.functions._
   * bucket, lane index in the key's low 2 bits. Output: unordered candidate
   * pairs (a, b), a < b.
   *
-  * Skew machinery (SURVEY.md §2.2 P7): by default every bucket is counted
-  * exactly inside the one repartition-and-sort exchange that streams its
-  * run ([[streamRuns]]). `sketchHotKeys` instead detects hot keys with the
-  * Misra-Gries FreqSketch ([[pairsPackedSketch]]) — the reference's
-  * `getFrequentKeys` heavy-hitter query (`FrequencyEstimator.java:75`,
-  * `FrequentItems.java:311-332`) run as a partial-aggregate (one tiny
-  * sketch per partition, merged on the driver, `FrequentItems.java:292-308`
-  * merge law) so hot-key detection costs O(k) driver bytes instead of
-  * per-key count state. Hot keys are salted into ceil(size/cap)
-  * sub-buckets; within each (key, salt) group pairs are emitted
-  * all-pairs when small, sliding-window when large (bounding both
+  * Skew machinery (SURVEY.md §2.2 P7): every bucket is counted exactly
+  * inside the one repartition-and-sort exchange that streams its run
+  * ([[streamRuns]]); the count is the run's length as the sorted partition
+  * streams past, so no per-key state is kept. Exact counts make the pair
+  * set a pure function of the data at any partitioning. (The reference's
+  * Misra-Gries heavy-hitter query is served separately, as the
+  * `freq_sketch_topk` SQL aggregate.) Hot keys are salted into
+  * ceil(size/cap) sub-buckets; within each (key, salt) group pairs are
+  * emitted all-pairs when small, sliding-window when large (bounding both
   * per-bucket pair count AND per-vertex degree — which is what keeps the
   * later CC joins hub-free); sub-buckets of a hot key are stitched with a
   * chain over their min ids so true giant clusters stay connected.
@@ -129,29 +126,18 @@ object CandidatePairs {
     *    lane-disjoint via the per-lane xor salt; the 2 bits lost to the
     *    shift are hash bits — a cross-bucket collision merges two buckets,
     *    which can only ADD candidates, all exactly verified downstream);
-    *  - the exact path ([[pairsPackedExact]]) moves them through ONE
-    *    repartition-and-sort exchange and streams complete bucket runs per
-    *    partition — counts, singleton drop, salting, expansion and chain
-    *    stitching all happen inside that single pass;
-    *  - `sketchHotKeys` selects the extreme-scale variant
-    *    ([[pairsPackedSketch]]): Misra-Gries hot-key detection in O(k)
-    *    driver bytes + salts-only broadcast, for corpora where even exact
-    *    per-key counting is too much state. */
-  def pairsPacked(packedIn: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame =
-    if (cfg.sketchHotKeys) pairsPackedSketch(packedIn, cfg)
-    else pairsPackedExact(packedIn, cfg)
-
-  /** Exact path: [[streamRuns]] with the packed run expander.
-    *
+    *  - they move through ONE repartition-and-sort exchange
+    *    ([[streamRuns]]) that streams complete bucket runs per partition —
+    *    counts, singleton drop, salting, expansion and chain stitching all
+    *    happen inside that single pass;
     *  - runs of 2..cap-1 ids emit all-pairs;
     *  - runs of >= cap ids are salted into ceil(n/cap) (clamped [2,
-    *    MaxSalts]) groups by pmod(murmur(id, bkey), salts) — the same pure
-    *    per-row function as before, so the emitted pair set (and the
-    *    fps_hits co-emission counts the containment gate reads) is
-    *    byte-identical to the old flow and independent of partitioning —
+    *    MaxSalts]) groups by pmod(murmur(id, bkey), salts) — a pure per-row
+    *    function, so the emitted pair set (and the fps_hits co-emission
+    *    counts the containment gate reads) is independent of partitioning —
     *    each group expanded all-pairs/windowed, plus the chain pairs over
     *    the salt-ordered group minima that keep a split bucket connected. */
-  private[dedup] def pairsPackedExact(packedIn: DataFrame, cfg: DedupConfig): DataFrame = {
+  def pairsPacked(packedIn: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame = {
     val cap = cfg.maxBucketSize
     streamRuns(packedIn, cfg, withFp = false) { (bkey, lane, ids, _) =>
       if (ids.length < cap) expand(ids, cap).map { case (a, b) => (a, b, lane) }
@@ -181,7 +167,7 @@ object CandidatePairs {
     def fp(r: (Long, Long, Long)): Long = r._3
   }
 
-  /** The bucket-run streamer under both exact entries: ONE exchange for
+  /** The bucket-run streamer under both entries: ONE exchange for
     * the whole pair generation.
     *
     * `repartition(bkey) + sortWithinPartitions(bkey, id)` makes every
@@ -270,9 +256,10 @@ object CandidatePairs {
     * MaxSalts >= cap. Residual approximation (ADVICE r2): a salt group
     * that lands *at or below* cap members would have gotten all-pairs
     * expansion in saltedRun but gets the window here; with window >=
-    * cap/4 the chains keep recall (the skewed-fixture recall gate covers
-    * the regime), and any TRUE giant bucket's groups are far above cap
-    * anyway. On the Hamming path the drain reads ids only and forfeits
+    * cap/4 the chains keep recall (DedupPipelineSpec's "exact pair
+    * generator at a bucket cap of 8" test gates recall with salting on;
+    * CandidatePairsSpec's overflow test keeps a drained run connected),
+    * and any TRUE giant bucket's groups are far above cap anyway. On the Hamming path the drain reads ids only and forfeits
     * Hamming-recall completeness for THIS run — which is why every drain
     * is counted on the overflow accumulator (ADVICE r4), never silent. */
   private def overflowRun(bkey: Long, lane: Int, src: Iterator[Long]): Iterator[(Long, Long, Int)] = {
@@ -399,7 +386,7 @@ object CandidatePairs {
   }
 
   /** Exact Hamming-join pair generation over (bkey, id, fp) bucket rows —
-    * the sibling of [[pairsPackedExact]] for predicates of the form
+    * the sibling of [[pairsPacked]] for predicates of the form
     * "Hamming(fp_a, fp_b) <= maxHam AND <secondary check>". Same
     * [[streamRuns]] exchange (3-long rows); every run of >= 2 ids goes to
     * [[expandHamming]], which expands all-pairs up to and including cap
@@ -420,100 +407,12 @@ object CandidatePairs {
     }
   }
 
-  /** Sketch path (the documented 10^12-row extreme: even the count>=2 key
-    * set outgrows a broadcast): Misra-Gries hot keys, O(k) driver bytes,
-    * salts-only broadcast, no singleton drop.
-    *
-    * Unlike the exact paths, the pair set here is NOT independent of the
-    * shuffle width. A key's salt count comes from its Misra-Gries upper
-    * bound, and that bound depends on how the stream was split into
-    * partitions and in which order the partial sketches merge: a key near
-    * the cap can be hot (salted) at one width and cold (one group) at
-    * another, and a hot key's `ub`, and with it `salts` and the groups,
-    * can differ. Recall is gated instead (DedupPipelineSpec's
-    * sketchHotKeys test). */
-  private[dedup] def pairsPackedSketch(packedIn: DataFrame, cfg: DedupConfig): DataFrame = {
-    val spark = packedIn.sparkSession
-    import spark.implicits._
-    val cap = cfg.maxBucketSize
-
-    val packed = RunScope.persist(packedIn)
-
-    // salt count for a key with `cnt` members: ceil-ish cnt/cap in [2, MaxSalts]
-    def saltCount(cnt: Column): Column = greatest(lit(2L),
-      least(lit(MaxSalts.toLong), (cnt / cap).cast("long") + 1L)).cast("int")
-
-    // sketch directly over the packed keyspace (lanes are disjoint by
-    // construction, so per-bkey hotness IS per-(key,lane) hotness)
-    val partials: Array[Array[Byte]] = packed.select($"bkey").as[Long]
-      .mapPartitions { it =>
-        val sk = FreqSketch(4096)
-        it.foreach(k => sk.update(k))
-        Iterator.single(sk.serialize())
-      }.collect()
-    val merged = partials.foldLeft(FreqSketch(4096)) { (acc, bytes) =>
-      acc.merge(FreqSketch.deserialize(bytes))
-    }
-    val hot = merged.frequentKeys(cap.toLong).map { case (k, _, _, ub) => (k, ub) }
-    val saltsDf = hot.toSeq.toDF("bkey", "ub")
-      .select($"bkey", saltCount($"ub").as("salts"))
-    val salted = packed.join(broadcast(saltsDf), Seq("bkey"), "left")
-
-    // pmod(murmur(id, bkey), salts) spreads a hot key's members over its
-    // salt groups deterministically (a pure function of the row — identical
-    // at any parallelism). skey re-mixes the salt into fresh high bits,
-    // keeping the lane index recoverable from the low 2 bits.
-    val withSkey = salted
-      .withColumn("salt", when($"salts".isNull, lit(0)).otherwise(
-        pmod(graft.functions.GraftFunctions.murmur3_pair($"id", $"bkey"),
-          $"salts".cast("long")).cast("int")))
-      .withColumn("skey", when($"salt" === 0, $"bkey").otherwise(
-        graft.functions.GraftFunctions.murmur3_pair($"bkey", $"salt".cast("long"))
-          .bitwiseAND(lit(~3L)).bitwiseOR($"bkey".bitwiseAND(lit(3L)))))
-
-    // pairs within each skey group: typed groupByKey + flatMapGroups — a
-    // sort-based shuffle of 2-long rows that streams each group once.
-    // (The collect_list/ObjectHashAggregate alternative spent more task CPU
-    // in SizeEstimator graph walks than in pair expansion; measured via
-    // jstack sampling at local[32].) Groups are bounded by construction:
-    // cold keys have < cap rows, hot keys are salted into ~cap-sized
-    // sub-buckets, so the per-group id array is O(cap).
-    val within = withSkey
-      .select($"skey", $"id").as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (skey: Long, rows: Iterator[(Long, Long)]) =>
-        val lane = 1 << (skey & 3L).toInt
-        val ids = rows.map(_._2).toArray
-        expand(ids, cap).map { case (a, b) => (a, b, lane) }
-      }
-      .toDF("a", "b", "lane")
-
-    // chain stitching across salt groups of the same hot key: min-id per
-    // (bkey, salt) via a map-side-combinable primitive hash agg over the
-    // hot rows only (the broadcast probe filters before the agg, so the
-    // shuffled partials are hot-keys-only, tiny), then per-bkey chains over
-    // the salt-ordered reps.
-    val chains = withSkey
-      .where($"salts".isNotNull)
-      .groupBy($"bkey", $"salt")
-      .agg(min($"id").as("minId"))
-      .groupBy($"bkey")
-      .agg(sort_array(collect_list(struct($"salt", $"minId"))).as("reps"))
-      .select($"bkey".bitwiseAND(lit(3L)).cast("int").as("li"), $"reps.minId".as[Array[Long]])
-      .as[(Int, Array[Long])]
-      .flatMap { case (li, reps) => starChain(reps, 1 << li) }
-      .toDF("a", "b", "lane")
-
-    aggregatePairs(within.union(chains))
-  }
-
   /** lane = OR of the lane bits that produced the pair (verification then
     * evaluates only the clauses whose lane emitted it). fps_hits counts the
-    * winnow-lane CO-EMISSIONS of the pair: under exact hot-key detection
-    * every term (bucket membership, salt assignment, window adjacency) is a
-    * pure function of the data, so the count is parallelism-independent and
-    * safe to gate on. (Under sketchHotKeys the salt counts depend on
-    * partition-order merge error — the gate must not be used there.) */
+    * winnow-lane CO-EMISSIONS of the pair: every term (bucket membership,
+    * exact run count, salt assignment, window adjacency) is a pure function
+    * of the data, so the count is parallelism-independent and safe to gate
+    * on. */
   private def aggregatePairs(emitted: DataFrame): DataFrame = {
     import emitted.sparkSession.implicits._
     emitted.where($"a" =!= $"b")

@@ -49,11 +49,21 @@ object DedupPipeline {
   final val LaneBands = 1
   final val LaneFps = 4
 
+  /** Minimum winnow-lane co-emissions (`fps_hits`) for a pair to enter the
+    * substring-containment verification. Winnowing guarantees >= 2 shared
+    * selected fingerprints for a shared run >= winnowWindow + winnowK - 1 +
+    * winnowWindow chars (= 79 < minContainLen), so a true containment pair
+    * co-emits >= 2 barring hot-key salt splits; corpus-wide shared
+    * boilerplate (e.g. a common prefix) co-emits a few fingerprints on
+    * MILLIONS of non-duplicate pairs, and this gate is what keeps the exact
+    * suffix-array verification off them. */
+  final val MinFpsHits = 2
+
   /** Union of the three candidate lanes through ONE skew-aware pair-gen
     * pass: bucket keys are lane-salted (xor with a per-lane constant keeps
     * the keyspaces disjoint up to a negligible 64-bit coincidence), so hot
-    * key detection, salting, grouping, and dedup each run once instead of
-    * three times — 1 sketch job + 1 shuffle instead of 3+3. */
+    * key counting, salting, grouping, and dedup each run once instead of
+    * three times — 1 shuffle instead of 3. */
   def candidates(features: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame = {
     // ONE pass over the features cache emits all three lanes' bucket rows
     // already in packed form (lane index in the key's low 2 bits): a
@@ -72,8 +82,9 @@ object DedupPipeline {
     // REDUNDANCY for short hamming-true pairs — if a hot SimHash-block
     // bucket is window-capped (CandidatePairs caps bucket fan-out) and
     // happens to miss such a pair, there is no fps fallback for it any
-    // more. Recall-gated: the skewed-fixture recall test must stay >=
-    // the gate whenever the cap or this floor changes.
+    // more. Recall-gated: DedupPipelineSpec's "exact pair generator at a
+    // bucket cap of 8" test must stay >= the gate whenever the cap or this
+    // floor changes.
     val fpsArr = when(col("nlen") >= cfg.minContainLen, col("fps"))
       .otherwise(array().cast("array<bigint>"))
     val packed = features.select(
@@ -140,15 +151,12 @@ object DedupPipeline {
         (col("lane").bitwiseAND(lit(LaneBands)) =!= 0) &&
           least(col("nsh_a"), col("nsh_b")).cast("double") >=
             greatest(col("nsh_a"), col("nsh_b")) * cfg.jaccardThreshold)
-      // fps_hits gate: under EXACT hot-key counts every co-emission term is
-      // a pure function of the data (bucket membership, salt = pmod(murmur),
-      // window adjacency), so the count is parallelism-independent and safe
-      // to gate on. Under sketchHotKeys the salt counts carry partition-
-      // order merge error — the gate is forced to 1 there to keep the edge
-      // set deterministic.
+      // fps_hits gate: every co-emission term is a pure function of the
+      // data (bucket membership, salt = pmod(murmur), window adjacency), so
+      // the count is parallelism-independent and safe to gate on
       .withColumn("con_possible",
         (col("lane").bitwiseAND(lit(LaneFps)) =!= 0) &&
-          col("fps_hits") >= (if (cfg.sketchHotKeys) 1 else cfg.minFpsHits) &&
+          col("fps_hits") >= MinFpsHits &&
           least(col("nlen_a"), col("nlen_b")) >= cfg.minContainLen)
       .select(col("a"), col("b"), col("ham_ok"), col("jac_possible"), col("con_possible")))
 

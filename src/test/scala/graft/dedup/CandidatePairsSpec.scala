@@ -11,9 +11,10 @@ import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit gates for the single-exchange skew-aware pair generation
-  * ([[CandidatePairs.pairsPackedExact]]) including the bounded-memory
+  * ([[CandidatePairs.pairsPacked]]) including the bounded-memory
   * overflow path that bench-scale corpora never reach, and the
-  * shuffle-width independence of both exact entries. */
+  * shuffle-width independence of both entries (with
+  * [[CandidatePairs.pairsHamming]]). */
 class CandidatePairsSpec extends AnyFunSuite with SparkTest {
 
   private val cfg = DedupConfig.default

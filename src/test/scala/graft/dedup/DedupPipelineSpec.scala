@@ -60,13 +60,12 @@ class DedupPipelineSpec extends AnyFunSuite with SparkTest {
     assert(recall >= 0.99, s"recall $recall < 0.99")
   }
 
-  test("sketchHotKeys with a small bucket cap keeps dup-pair recall >= 0.99") {
-    // maxBucketSize = 8: the Misra-Gries hot-key path (pairsPackedSketch)
-    // salts the buckets of every planted cluster above 8 members, the
-    // giant one of 30+ included
-    val sketch = clusterOf(DedupPipeline.run(clips, cfg.copy(sketchHotKeys = true, maxBucketSize = 8)))
-    val recall = BruteForceOracle.pairRecall(oracleClusters, groups(sketch))
-    info(s"sketchHotKeys dup-pair recall = $recall")
+  test("the exact pair generator at a bucket cap of 8 keeps dup-pair recall >= 0.99") {
+    // maxBucketSize = 8: CandidatePairs.pairsPacked salts the buckets of
+    // every planted cluster above 8 members, the giant one of 30+ included
+    val salted = clusterOf(DedupPipeline.run(clips, cfg.copy(maxBucketSize = 8)))
+    val recall = BruteForceOracle.pairRecall(oracleClusters, groups(salted))
+    info(s"bucket cap 8 dup-pair recall = $recall")
     assert(recall >= 0.99, s"recall $recall < 0.99")
   }
 
